@@ -21,6 +21,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * the loop is primitive Scala with no allocation beyond the output.
   */
 
+private[expressions] object GramExpressions {
+  /** Element `i` of a token array. `getUTF8String` on a null element of an
+    * UnsafeArrayData returns undefined bytes, not null, so the kernels'
+    * no-null-tokens precondition is checked here rather than trusted. */
+  def token(arr: ArrayData, i: Int, kernel: String): UTF8String = {
+    if (arr.isNullAt(i))
+      throw new IllegalArgumentException(
+        s"$kernel: null token at index $i; token arrays must not contain nulls")
+    arr.getUTF8String(i)
+  }
+}
+
 /** Adjacent token pairs of a token array as array<struct<w1,w2>> — the
   * bigram explode shape. `padded = false` emits the n−1 true bigrams
   * (empty for arrays shorter than 2). `padded = true` emits n entries:
@@ -32,9 +44,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * PRECONDITION: the input array must not contain null elements —
   * `tokenize` output never does (split never yields null elements), and
-  * every caller feeds tokenize output. (`getUTF8String` on a null
-  * element of an UnsafeArrayData returns undefined bytes, not null, so
-  * nulls would NOT pass through cleanly; r14 ADVICE.) */
+  * every caller feeds tokenize output. Enforced by [[GramExpressions.token]]:
+  * a null element fails the task instead of yielding undefined bytes. */
 case class AdjacentPairs(child: Expression, padded: Boolean)
     extends UnaryExpression with CodegenFallback {
 
@@ -52,8 +63,9 @@ case class AdjacentPairs(child: Expression, padded: Boolean)
     val out = new Array[Any](m)
     var i = 0
     while (i < m) {
-      val w1 = arr.getUTF8String(i)
-      val w2 = if (i + 1 < n) arr.getUTF8String(i + 1) else null
+      val w1 = GramExpressions.token(arr, i, "AdjacentPairs")
+      val w2 = if (i + 1 < n) GramExpressions.token(arr, i + 1, "AdjacentPairs")
+               else null
       out(i) = new GenericInternalRow(Array[Any](w1, w2)): InternalRow
       i += 1
     }
@@ -70,7 +82,8 @@ case class AdjacentPairs(child: Expression, padded: Boolean)
   * chain. Arrays shorter than `n` yield an empty result. `hashed = true`
   * emits the built-in `xxhash64` (seed 42) of each gram string instead —
   * value-identical to `xxhash64(array_join(slice(toks,i,n), " "))`, with
-  * only 8 bytes per gram leaving the kernel (the d12b production form). */
+  * only 8 bytes per gram leaving the kernel (the d12b production form).
+  * A null token fails the task, as in [[AdjacentPairs]]. */
 case class TokenGramStrings(child: Expression, n: Int,
                             hashed: Boolean = false)
     extends UnaryExpression with CodegenFallback {
@@ -94,7 +107,10 @@ case class TokenGramStrings(child: Expression, n: Int,
     var i = 0
     while (i < m) {
       var k = 0
-      while (k < n) { parts(2 * k) = arr.getUTF8String(i + k); k += 1 }
+      while (k < n) {
+        parts(2 * k) = GramExpressions.token(arr, i + k, "TokenGramStrings")
+        k += 1
+      }
       val g = UTF8String.concat(parts: _*)
       out(i) = if (hashed) XxHash64Function.hash(g, StringType, 42L)
                else g
@@ -127,7 +143,8 @@ case class TokenGramStrings(child: Expression, n: Int,
   *    [[graft.operators.Dsir.importanceWeights]] bucket derivation.
   *
   * Callers take `pmod(hash, buckets)` in-plan, so the bucket arithmetic
-  * stays visible to the optimizer and identical to the previous form. */
+  * stays visible to the optimizer and identical to the previous form.
+  * A null token fails the task, as in [[AdjacentPairs]]. */
 case class TokenGramHashes(child: Expression, fnv: Boolean)
     extends UnaryExpression with CodegenFallback {
 
@@ -157,7 +174,7 @@ case class TokenGramHashes(child: Expression, fnv: Boolean)
     val out = new Array[Long](if (n >= 2) 2 * n - 1 else n)
     var i = 0
     while (i < n) {   // unigrams, in order
-      val w = arr.getUTF8String(i)
+      val w = GramExpressions.token(arr, i, "TokenGramHashes")
       out(i) =
         if (fnv) fnvFold(FNV_BASIS, w)
         else XxHash64Function.hash(w, StringType, 42L)
@@ -165,8 +182,8 @@ case class TokenGramHashes(child: Expression, fnv: Boolean)
     }
     i = 0
     while (i < n - 1) {   // bigrams "w1 w2", in order
-      val w1 = arr.getUTF8String(i)
-      val w2 = arr.getUTF8String(i + 1)
+      val w1 = GramExpressions.token(arr, i, "TokenGramHashes")
+      val w2 = GramExpressions.token(arr, i + 1, "TokenGramHashes")
       out(n + i) =
         if (fnv) fnvFold((fnvFold(FNV_BASIS, w1) ^ 0x20L) * FNV_PRIME, w2)
         else XxHash64Function.hash(

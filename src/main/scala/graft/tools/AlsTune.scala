@@ -1,14 +1,9 @@
 package graft.tools
 import org.apache.spark.ml.recommendation.ALS
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object AlsTune {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val d = "/root/testdata/sf0.1"
     val ratings = spark.read.parquet(s"$d/lineitem.parquet")
       .join(spark.read.parquet(s"$d/orders.parquet"), col("l_orderkey") === col("o_orderkey"))

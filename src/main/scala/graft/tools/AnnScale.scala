@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Ann
 
@@ -26,11 +26,7 @@ import graft.operators.Ann
 object AnnScale {
   def main(args: Array[String]): Unit = {
     val Array(d1, dN) = args.take(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     // Nx = whatever factor the second dir was generated with (10× or
     // 100× corpora both go through here; the row-count line disambiguates)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import graft.operators.Ann
 
 /** Scratch diagnostic for the bimodal ivfTopK timing observed in the r8
@@ -13,27 +11,9 @@ import graft.operators.Ann
 object AnnVariance {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/scale10x")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
-    @volatile var taskTime = 0L; @volatile var gcTime = 0L
-    @volatile var spill = 0L; @volatile var shufRead = 0L
-    @volatile var cpuTime = 0L; @volatile var nTasks = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          taskTime += m.executorRunTime; gcTime += m.jvmGCTime
-          cpuTime += m.executorCpuTime / 1000000L
-          spill += m.memoryBytesSpilled + m.diskBytesSpilled
-          shufRead += m.shuffleReadMetrics.totalBytesRead
-          nTasks += 1
-        }
-      }
-    })
+    val meter = new Harness.Meter(spark)
 
     // watchdog: when a run stalls past 12 s, dump driver thread stacks —
     // the task-metrics runs showed the slow mode is a no-tasks-running
@@ -68,18 +48,17 @@ object AnnVariance {
     println(s"== $n vectors, $cents centroids ==")
     (1 to 6).foreach { i =>
       spark.catalog.clearCache(); System.gc()
-      val (t0, g0, s0, r0, c0, k0) = (taskTime, gcTime, spill, shufRead, cpuTime, nTasks)
-      val w0 = System.nanoTime()
-      runStart = w0; dumped = false
-      val out = Ann.ivfTopK(emb, "vec_id", "embedding", k = 5,
-        nCentroids = cents, nProbe = 4)
-      val rows = out.count(); out.unpersist(true)
-      runStart = 0L
-      val wall = (System.nanoTime() - w0) / 1e9
-      println(f"run$i wall=$wall%.2f s rows=$rows tasks=${nTasks - k0} " +
-        f"taskTime=${(taskTime - t0) / 1e3}%.1f s cpu=${(cpuTime - c0) / 1e3}%.1f s " +
-        f"gc=${(gcTime - g0) / 1e3}%.1f s spill=${(spill - s0) / 1e6} MB " +
-        f"shufRead=${(shufRead - r0) / 1e6} MB")
+      dumped = false
+      val run = meter.delta {
+        runStart = System.nanoTime()
+        val out = Ann.ivfTopK(emb, "vec_id", "embedding", k = 5,
+          nCentroids = cents, nProbe = 4)
+        val rows = out.count(); out.unpersist(true)
+        runStart = 0L
+        rows
+      }
+      println(f"run$i wall=${run.wallS}%.2f s rows=${run.result} " +
+        run.tasks.columns)
     }
     spark.stop()
   }

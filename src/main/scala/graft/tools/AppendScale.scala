@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal timer for the incremental IVF append (the 100 TB
@@ -14,12 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object AppendScale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val emb = graft.Tables.embeddings(spark, args.head)
     val base = emb.where(pmod(col("vec_id"), lit(20L)) =!= 0L)
     val delta = emb.where(pmod(col("vec_id"), lit(20L)) === 0L)

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -22,12 +21,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   */
 object AppendServeScale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import spark.implicits._
     val nBatches = if (args.length > 1) args(1).toInt else 5
     val batchRows = if (args.length > 2) args(2).toInt else 10000

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures [[graft.operators.Ann.compactIvfIndex]] at the N× fixture:
@@ -14,11 +13,7 @@ object CompactScale {
   def main(args: Array[String]): Unit = {
     val embDir = args.head
     val days = if (args.length > 1) args(1).toInt else 8
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val emb = spark.read.parquet(s"$embDir/embeddings.parquet")
     val n = emb.count()
     val nCents = if (args.length > 2) args(2).toInt

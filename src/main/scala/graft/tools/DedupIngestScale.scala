@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
@@ -23,11 +22,7 @@ object DedupIngestScale {
     val srcDir = args.head
     val nBatches = if (args.length > 1) args(1).toInt else 5
     val foldAfter = if (args.length > 2) args(2).toInt else 0
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import spark.implicits._
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
       .select(col("doc_id"), col("text"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Round-10 adjudication: run the e2e2b exact-mode composed pipeline at an
@@ -14,14 +13,7 @@ import java.nio.file.{Files, Paths}
 object E2e2bScale {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, boundS) = args.take(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     def esc(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""

@@ -29,26 +29,6 @@ import org.apache.spark.sql.streaming.Trigger
   * Prints one `FOLDECON` line per fire. */
 object FoldEconScale {
 
-  /** Summed executor task-seconds listener; [[snap]] drains the listener
-    * bus first so a delta taken right after a fold is not missing the
-    * fold's own trailing task-end events. */
-  private final class TaskClock(spark: SparkSession) {
-    private val runMs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) { runMs.addAndGet(m.executorRunTime); () }
-        }
-      })
-    def snap(): Double = {
-      org.apache.spark.graftbridge.ListenerBridge.drain(
-        spark.sparkContext, 10000L)
-      runMs.get() / 1e3
-    }
-  }
-
   private def dirBytes(dir: String): Long = {
     val p = java.nio.file.Paths.get(dir)
     if (!java.nio.file.Files.exists(p)) return 0L
@@ -80,11 +60,7 @@ object FoldEconScale {
       .split(",").map(_.trim.toInt).toSeq
     val batchN = if (args.length > 3) args(3).toInt else 5000
     val tiered = args.length > 4 && args(4) == "1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     which match {
       case "dedup" => dedup(spark, srcDir, mults, batchN, tiered)
       case "ivf" => ivf(spark, srcDir, mults, batchN, tiered)
@@ -101,7 +77,7 @@ object FoldEconScale {
   private def dedup(spark: SparkSession, srcDir: String, mults: Seq[Int],
                     batchN: Int, tiered: Boolean): Unit = {
     import spark.implicits._
-    val clock = new TaskClock(spark)
+    val meter = new Harness.Meter(spark)
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     mults.foreach { m =>
@@ -113,18 +89,18 @@ object FoldEconScale {
       implicit val sqlCtx = spark.sqlContext
       val stream = MemoryStream[(Long, String)]
       @volatile var foldMark = 0L
-      @volatile var foldMarkTask = 0.0
+      @volatile var foldMarkTask = 0L
       val folds = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
       val q = graft.jobs.DedupIngestJob.start(
         stream.toDF().toDF("doc_id", "text"), "doc_id", "text", dir,
         trigger = Trigger.ProcessingTime(0L),
         onBatch = (_, _) => {
-          foldMarkTask = clock.snap(); foldMark = System.nanoTime() },
+          foldMarkTask = meter.snapshot().runMs; foldMark = System.nanoTime() },
         foldAfterBatches = 1,
         foldBaseRatio = if (tiered) 0.3 else 0.0,
         onFold = _ => folds.synchronized {
           folds += (((System.nanoTime() - foldMark) / 1e9,
-            clock.snap() - foldMarkTask)); () })
+            (meter.snapshot().runMs - foldMarkTask) / 1e3)); () })
       try {
         var fire = 0
         batchRows.grouped(batchN).foreach { rows =>
@@ -161,7 +137,7 @@ object FoldEconScale {
     * build is the untimed major split to base+tail). */
   private def ivf(spark: SparkSession, srcDir: String, mults: Seq[Int],
                   batchN: Int, tiered: Boolean): Unit = {
-    val clock = new TaskClock(spark)
+    val meter = new Harness.Meter(spark)
     val emb = spark.read.parquet(s"$srcDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     mults.foreach { m =>
@@ -192,20 +168,18 @@ object FoldEconScale {
           "vec_id", "embedding", dir)
         val preBytes = dirBytes(dir)
         val preGens = genSizes(dir, "gen-")
-        val task0 = clock.snap()
-        val t0 = System.nanoTime()
-        if (tiered)
-          graft.operators.Ann.compactIvfIndexTiered(spark, dir,
-            baseRatio = 0.3)
-        else
-          graft.operators.Ann.compactIvfIndex(spark, dir)
-        val wall = (System.nanoTime() - t0) / 1e9
-        val taskS = clock.snap() - task0
+        val fold = meter.delta {
+          if (tiered)
+            graft.operators.Ann.compactIvfIndexTiered(spark, dir,
+              baseRatio = 0.3)
+          else
+            graft.operators.Ann.compactIvfIndex(spark, dir)
+        }
         val written = createdBytes(preGens, genSizes(dir, "gen-"))
         println(f"FOLDECON ivf mult=$m fire=$fire " +
           f"base_vecs=${m * batchN} shard_vecs=$batchN " +
-          f"pre_bytes=$preBytes written=$written wall=$wall%.2f " +
-          f"task_s=$taskS%.2f tiered=$tiered")
+          f"pre_bytes=$preBytes written=$written wall=${fold.wallS}%.2f " +
+          f"task_s=${fold.tasks.runMs / 1e3}%.2f tiered=$tiered")
       }
       deleteRec(dir)
     }

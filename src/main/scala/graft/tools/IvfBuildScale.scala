@@ -1,12 +1,9 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** A/B harness for the r11 IVF assignment-shuffle sizing: times
   * `Ann.buildIvfIndex` (the posting build whose window shuffle is
   * ∝ vectors × centroids) on an N× embeddings replica, printing the
-  * TimeOne-style task/GC/spill/shuffle columns per run. The knob under
+  * harness's task/GC/spill/shuffle columns per run. The knob under
   * test is in-plan (`assignCells` repartition from plan-stats × centroid
   * count, floor = session setting); force the OFF arm with
   *   set run/javaOptions += "-Dgraft.tuning.targetPartitionBytes=1152921504606846976"
@@ -18,23 +15,8 @@ import org.apache.spark.sql.SparkSession
 object IvfBuildScale {
   def main(args: Array[String]): Unit = {
     val embDir = args.head
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    @volatile var taskTime = 0L; @volatile var gcTime = 0L
-    @volatile var spill = 0L; @volatile var shufWrite = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          taskTime += m.executorRunTime; gcTime += m.jvmGCTime
-          spill += m.memoryBytesSpilled + m.diskBytesSpilled
-          shufWrite += m.shuffleWriteMetrics.bytesWritten
-        }
-      }
-    })
+    val spark = Harness.session()
+    val meter = new Harness.Meter(spark)
     val emb = spark.read.parquet(s"$embDir/embeddings.parquet")
     val n = emb.count()
     val nCents = if (args.length > 1) args(1).toInt
@@ -46,18 +28,9 @@ object IvfBuildScale {
     (1 to runs).foreach { i =>
       spark.catalog.clearCache(); System.gc()
       val dir = java.nio.file.Files.createTempDirectory("ivfbuild").toString
-      val (t0m, g0, s0, w0) = (taskTime, gcTime, spill, shufWrite)
-      val t0 = System.nanoTime()
-      graft.operators.Ann.buildIvfIndex(emb, "vec_id", "embedding", dir,
-        nCentroids = nCents, seed = 42L, distributedFit = true)
-      // drain async task-end delivery before the snapshot (the same skew
-      // BenchServe fixes via the bridge — late events would land on the
-      // NEXT run's columns)
-      org.apache.spark.graftbridge.ListenerBridge.drain(
-        spark.sparkContext, 10000L)
-      println(f"TIMING ivf_build run$i ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-        f"[task ${(taskTime - t0m) / 1e3}%.0f s gc ${(gcTime - g0) / 1e3}%.0f s " +
-        f"spill ${(spill - s0) / 1e6} MB shufWrite ${(shufWrite - w0) / 1e6} MB]")
+      val run = meter.delta(graft.operators.Ann.buildIvfIndex(emb, "vec_id",
+        "embedding", dir, nCentroids = nCents, seed = 42L, distributedFit = true))
+      println(f"TIMING ivf_build run$i ${run.wallS}%.2f s ${run.tasks.columns}")
       // the A/B must compare identical results, not just walls — and the
       // FILE count is the write-cost driver (a dynamic-partition write
       // opens a parquet file per (task, cell) pair it sees)

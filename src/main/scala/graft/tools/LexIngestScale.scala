@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
@@ -51,11 +50,7 @@ object LexIngestScale {
     val batches = if (args.length > 2) args(2).toInt else 5
     val foldAfter = if (args.length > 3) args(3).toInt else 1
     val nReaders = if (args.length > 4) args(4).toInt else 2
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import spark.implicits._
 
     val docs = spark.read.parquet(s"$corpusDir/documents.parquet")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The lexical index's reason to exist, measured: serving a BM25 query
@@ -21,11 +20,7 @@ object LexServeBench {
     val corpusDir = args(0)
     val indexDir = args(1)
     val nQueries = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import spark.implicits._
     val docs = spark.read.parquet(s"$corpusDir/documents.parquet")
       .select(col("doc_id"),

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Maintenance-UNDER-SERVE rehearsal (round 11): the zero-downtime cycle
@@ -23,12 +22,7 @@ import org.apache.spark.sql.functions._
   */
 object MaintainServeScale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     val emb = graft.Tables.embeddings(spark, args.head)
     val n = emb.count()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale rehearsal for the FULL composed pipeline `CorpusPrep.prepareFull`
@@ -21,24 +19,8 @@ object PrepFullScale {
   def main(args: Array[String]): Unit = {
     val dir = args.head
     val runs = if (args.length > 1) args(1).toInt else 1
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    @volatile var taskTime = 0L; @volatile var gcTime = 0L
-    @volatile var spill = 0L; @volatile var shufRead = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          taskTime += m.executorRunTime; gcTime += m.jvmGCTime
-          spill += m.memoryBytesSpilled + m.diskBytesSpilled
-          shufRead += m.shuffleReadMetrics.totalBytesRead
-        }
-      }
-    })
+    val spark = Harness.session()
+    val meter = new Harness.Meter(spark)
     // intra-run peak pressure is the documented envelope risk: sample the
     // heap at 250 ms and report the run's high-water mark
     val peak = new java.util.concurrent.atomic.AtomicLong
@@ -54,25 +36,28 @@ object PrepFullScale {
     val docs = graft.Tables.documents(spark, dir)
     (1 to runs).foreach { i =>
       spark.catalog.clearCache(); System.gc()
-      taskTime = 0; gcTime = 0; spill = 0; shufRead = 0; peak.set(0)
+      peak.set(0)
       val stages = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-      val t0 = System.nanoTime()
-      val out = graft.jobs.CorpusPrep.prepareFull(
-        docs.where(col("doc_id") % 100 =!= 0), "doc_id", "text",
-        benchmark = Some(docs.where(col("doc_id") % 100 === 0)
-          .select(col("text"))),
-        dsirTarget = Some(col("lang") === "en"),
-        dsirKeep = 200,
-        stageTimer = (n, s) => { stages(n) = s; () })
-      val tAct = System.nanoTime()
-      val nOut = out.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      stages("final_action") = (System.nanoTime() - tAct) / 1e9
+      val run = meter.delta {
+        val out = graft.jobs.CorpusPrep.prepareFull(
+          docs.where(col("doc_id") % 100 =!= 0), "doc_id", "text",
+          benchmark = Some(docs.where(col("doc_id") % 100 === 0)
+            .select(col("text"))),
+          dsirTarget = Some(col("lang") === "en"),
+          dsirKeep = 200,
+          stageTimer = (n, s) => { stages(n) = s; () })
+        val tAct = System.nanoTime()
+        val nOut = out.count()
+        stages("final_action") = (System.nanoTime() - tAct) / 1e9
+        nOut
+      }
+      val t = run.tasks
       val body = stages.map { case (k, v) => f""""$k":$v%.1f""" }.mkString(",")
       println(f"""{"tool":"PrepFullScale","dir":"$dir","run":$i,""" +
-        f""""wall_s":$wall%.1f,"rows_out":$nOut,""" +
-        f""""task_s":${taskTime / 1e3}%.0f,"gc_s":${gcTime / 1e3}%.0f,""" +
-        f""""spill_gb":${spill / 1e9}%.1f,"shuffle_read_mb":${shufRead / 1e6}%.1f,""" +
+        f""""wall_s":${run.wallS}%.1f,"rows_out":${run.result},""" +
+        f""""task_s":${t.runMs / 1e3}%.0f,"gc_s":${t.gcMs / 1e3}%.0f,""" +
+        f""""spill_gb":${t.spillBytes / 1e9}%.1f,""" +
+        f""""shuffle_read_mb":${t.shuffleReadBytes / 1e6}%.1f,""" +
         f""""peak_heap_gb":${peak.get / 1e9}%.1f,"stages":{$body}}""")
     }
     stopSampler.set(true)

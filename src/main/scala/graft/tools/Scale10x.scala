@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal corpus generator (VERDICT r6 task 1): writes an N×
@@ -23,11 +22,7 @@ object Scale10x {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val replicas = (0 until factor).map { i =>
       val text =

@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Scale-rehearsal timer for the suffix-array pass over the FULL corpus
   * (the d14 gate query pins a fixed doc_id slice, so it cannot measure
   * corpus scaling — this times `duplicatedRegionsStaged` end to end at
@@ -16,25 +13,9 @@ object SuffixScale {
     // spills once per-partition sort working sets outgrow execution
     // memory at a FIXED 32 partitions — the knob proves the documented
     // rule (partitions ∝ data keeps working sets constant, spill gone).
-    val parts = sys.env.getOrElse("SUFFIX_SHUFFLE_PARTITIONS", "32")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    @volatile var taskTime = 0L; @volatile var gcTime = 0L
-    @volatile var spill = 0L; @volatile var shufRead = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          taskTime += m.executorRunTime; gcTime += m.jvmGCTime
-          spill += m.memoryBytesSpilled + m.diskBytesSpilled
-          shufRead += m.shuffleReadMetrics.totalBytesRead
-        }
-      }
-    })
+    val spark = Harness.session(conf = sys.env.get("SUFFIX_SHUFFLE_PARTITIONS")
+      .map("spark.sql.shuffle.partitions" -> _).toMap)
+    val meter = new Harness.Meter(spark)
     val docs = graft.Tables.documents(spark, args.head)
     // SUFFIX_DIAG=1 (r11, the run3-OOM investigation): after each run —
     // post release()/clearCache()/System.gc(), i.e. at the point where a
@@ -64,15 +45,15 @@ object SuffixScale {
     (1 to 3).foreach { i =>
       spark.catalog.clearCache()
       System.gc()
-      val (t0m, g0, s0, r0) = (taskTime, gcTime, spill, shufRead)
-      val t0 = System.nanoTime()
-      val staged = graft.operators.SuffixDedup.duplicatedRegionsStaged(
-        docs, "doc_id", "text", minLength = 64)
-      val n = staged.df.count()
-      staged.release()
-      println(f"TIMING d14full_suffix run$i ${(System.nanoTime() - t0) / 1e9}%.2f s regions=$n " +
-        f"[task ${(taskTime - t0m) / 1e3}%.0f s gc ${(gcTime - g0) / 1e3}%.0f s " +
-        f"spill ${(spill - s0) / 1e6} MB shufRead ${(shufRead - r0) / 1e6} MB]")
+      val run = meter.delta {
+        val staged = graft.operators.SuffixDedup.duplicatedRegionsStaged(
+          docs, "doc_id", "text", minLength = 64)
+        val n = staged.df.count()
+        staged.release()
+        n
+      }
+      println(f"TIMING d14full_suffix run$i ${run.wallS}%.2f s " +
+        f"regions=${run.result} ${run.tasks.columns}")
       heapDiag(s"after-run$i")
     }
     spark.stop()

@@ -1,6 +1,4 @@
 package graft.tools
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Cold-cache/warm-JVM 3-run timer for any declared query (the
   * SCALING.md rehearsal workhorse). r8: each run also prints its summed
@@ -12,34 +10,14 @@ import org.apache.spark.sql.SparkSession
   * into a single-task stage). */
 object TimeOne {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    @volatile var taskTime = 0L; @volatile var gcTime = 0L
-    @volatile var spill = 0L; @volatile var shufRead = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          taskTime += m.executorRunTime; gcTime += m.jvmGCTime
-          spill += m.memoryBytesSpilled + m.diskBytesSpilled
-          shufRead += m.shuffleReadMetrics.totalBytesRead
-        }
-      }
-    })
+    val spark = Harness.session()
+    val meter = new Harness.Meter(spark)
     args.tail.foreach { n =>
       (1 to 3).foreach { i =>
         spark.catalog.clearCache() // mirror Bench: cold cache, warm JVM
         System.gc() // let ContextCleaner drop prior runs' cached blocks
-        val (t0m, g0, s0, r0) = (taskTime, gcTime, spill, shufRead)
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(n)(spark, args.head).count()
-        println(f"TIMING $n run$i ${(System.nanoTime()-t0)/1e9}%.2f s " +
-          f"[task ${(taskTime-t0m)/1e3}%.0f s gc ${(gcTime-g0)/1e3}%.0f s " +
-          f"spill ${(spill-s0)/1e6} MB shufRead ${(shufRead-r0)/1e6} MB]")
+        val run = meter.delta(graft.SparkEntry.queries(n)(spark, args.head).count())
+        println(f"TIMING $n run$i ${run.wallS}%.2f s ${run.tasks.columns}")
       }
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -48,11 +48,7 @@ object TriTenantScale {
     val tiered = args.length > 4 && args(4) == "1"
     val nReaders = if (args.length > 5) args(5).toInt else 2
     val withLex = args.length > 6 && args(6) == "1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import spark.implicits._
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
       .select(col("doc_id"), col("text"))

@@ -130,4 +130,21 @@ class GramKernelSpec extends SparkSuite {
       .as[Seq[String]].collect()
     assert(got.toSeq == old.toSeq)
   }
+
+  test("AdjacentPairs, TokenGramStrings and TokenGramHashes fail on a null token") {
+    val withNull = Seq(Seq("a", null, "c")).toDF("toks")
+    val kernels = Seq(
+      "AdjacentPairs" -> AdjacentPairs(expression(col("toks")), padded = true),
+      "TokenGramStrings" -> TokenGramStrings(expression(col("toks")), 2),
+      "TokenGramHashes" -> TokenGramHashes(expression(col("toks")), fnv = true))
+    for ((name, kernel) <- kernels) {
+      val err = intercept[Exception] {
+        withNull.select(column(kernel).as("g")).collect()
+      }
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+      assert(msgs.exists(_.contains(s"$name: null token at index 1")),
+        msgs.mkString(" | "))
+    }
+  }
 }
