@@ -1,20 +1,17 @@
 package graft.tools
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicBoolean
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Append-UNDER-SERVE rehearsal (round 10): the operational loop where
   * [[graft.jobs.IndexIngestJob]] streams daily vector deltas into a live
-  * IVF index WHILE serving queries run against it — the shape
-  * `tools/AppendScale` measured without query load. Reports (a) per-shard
+  * IVF index WHILE serving queries run against it. Reports (a) per-shard
   * append wall with concurrent queries, (b) per-query wall before / during
-  * / after the append stream, and (c) the generation each query observed
+  * / after the append stream, (c) the generation each query observed
   * (the marker-commit protocol means a query sees every shard whose commit
-  * marker existed when it planned — never a torn one).
+  * marker existed when it planned — never a torn one), and (d) the reader
+  * errors, which fail the run.
   *
   * Usage: runMain graft.tools.AppendServeScale <sfDir-or-scaled-dir>
   *        [nBatches=5] [batchRows=10000]
@@ -41,11 +38,6 @@ object AppendServeScale {
     println(f"TIMING build_base ${(System.nanoTime() - t0) / 1e9}%.1f s " +
       s"(rows=${base.count()})")
 
-    // the serving side: a loop of 32-query probes against the live dir,
-    // tagged with the wall and the shard count the manifest listing
-    // exposed at plan time
-    val stopServe = new AtomicBoolean(false)
-    val queryLog = new ConcurrentLinkedQueue[(Double, Long)]()
     // generation observed = committed shard count at plan time (the
     // marker files — inside postings.parquet/ — are the commit
     // protocol's unit of visibility)
@@ -53,39 +45,35 @@ object AppendServeScale {
       Option(new java.io.File(s"${graft.operators.Ann.resolveIvfDir(
           spark, dir)}/postings.parquet").list()).map(
         _.count(_.startsWith("_SHARD_COMMIT_")).toLong).getOrElse(0L)
-    def oneQuery(): Double = {
-      val gen = committedShards()
+    def query(): Unit = graft.operators.Ann.queryIvfIndex(
+      queries, "vec_id", "embedding", dir, k = 10, nProbe = 4).count()
+    def timedQuery(): Double = {
       val q0 = System.nanoTime()
-      graft.operators.Ann.queryIvfIndex(
-        queries, "vec_id", "embedding", dir, k = 10, nProbe = 4).count()
-      val w = (System.nanoTime() - q0) / 1e9
-      queryLog.add((w, gen))
-      w
+      query()
+      (System.nanoTime() - q0) / 1e9
     }
-    oneQuery() // warm (codegen + first manifest read)
-    val before = (1 to 3).map(_ => oneQuery())
-    queryLog.clear() // the log belongs to the during phase only
-
-    val serveThread = new Thread(() => {
-      while (!stopServe.get()) oneQuery()
-    }, "serve-loop")
-    serveThread.setDaemon(true)
+    timedQuery() // warm (codegen + first manifest read)
+    val before = (1 to 3).map(_ => timedQuery())
 
     // the ingest side: IndexIngestJob over a MemoryStream fed one
     // day's-delta batch at a time
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, Array[Float])]
-    val appendWalls = new ConcurrentLinkedQueue[Double]()
     @volatile var tBatch = 0L
     val q = graft.jobs.IndexIngestJob.start(
       stream.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", dir,
       trigger = Trigger.ProcessingTime(0L),
-      onShard = (_, sid) => {
-        appendWalls.add((System.nanoTime() - tBatch) / 1e9)
-        println(f"APPEND shard=$sid wall=${(System.nanoTime() - tBatch) / 1e9}%.1f s")
-      })
+      onShard = (_, sid) =>
+        println(f"APPEND shard=$sid wall=${(System.nanoTime() - tBatch) / 1e9}%.1f s"))
 
-    serveThread.start()
+    // the serving side: a loop of 32-query probes against the live dir,
+    // each labelled with the shard count the manifest listing exposed at
+    // plan time
+    val readers = Harness.Readers(1, "serve-loop", phase = "during") {
+      val gen = committedShards()
+      query()
+      gen
+    }
     val during = (0 until nBatches).map { i =>
       val rows = delta.slice(i * batchRows, (i + 1) * batchRows)
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
@@ -94,24 +82,18 @@ object AppendServeScale {
       q.processAllAvailable()
       (System.nanoTime() - tBatch) / 1e9
     }
-    stopServe.set(true); serveThread.join(60000); q.stop()
-    val logged = queryLog.toArray(Array.empty[(Double, Long)])
-    val walls = logged.map(_._1).sorted
+    readers.stop(); q.stop()
 
-    val after = (1 to 3).map(_ => oneQuery())
-    // a very fast append phase can outrun the serve loop's first query —
-    // report that honestly instead of crashing on an empty percentile
-    val duringStats =
-      if (walls.isEmpty) "query_during=NONE-COMPLETED "
-      else f"query_during_p50=${walls(walls.length / 2)}%.2f " +
-        f"p95=${walls(math.min(walls.length - 1, (walls.length * 19) / 20))}%.2f s " +
-        f"(n=${walls.length}, generations ${logged.map(_._2).min}-${logged.map(_._2).max}) "
+    val after = (1 to 3).map(_ => timedQuery())
     println(f"APPEND_SERVE batches=$nBatches rows/batch=$batchRows " +
       f"append_med=${during.sorted.apply(during.length / 2)}%.1f s " +
       f"query_before=${before.min}%.2f-${before.max}%.2f s " +
-      duringStats +
       f"query_after=${after.min}%.2f-${after.max}%.2f s " +
       s"final_gen=${committedShards()}")
+    // a very fast append phase can outrun the serve loop's first query:
+    // the during line then reads n=0
+    readers.report("APPEND_SERVE")
+    readers.requireClean()
     spark.stop()
   }
 }

@@ -6,7 +6,10 @@ import org.apache.spark.sql.functions._
   * build a base index, append D daily shards, time queries against the
   * fragmented index, compact, time the same queries against the folded
   * one — the row SCALING.md wants for "append history is not free at
-  * read time, and compaction resets it".
+  * read time, and compaction resets it". Ends by timing a full rebuild
+  * over the whole corpus: `rebuild_s` against the median daily append
+  * wall is the operational saving the append path buys (the 100 TB
+  * shape grows the index by O(delta), never O(corpus)).
   *
   * Usage: CompactScale <embDir> [days=8] [nCentroids=sqrt(n)] */
 object CompactScale {
@@ -29,14 +32,16 @@ object CompactScale {
       distributedFit = true)
     println(f"COMPACT base_build ${(System.nanoTime() - t0) / 1e9}%.1f s")
     val step = math.max(1L, (hi - mid) / days)
-    (0 until days).foreach { d =>
+    val appendWalls = (0 until days).map { d =>
       val a = mid + 1 + d * step
       val b = if (d == days - 1) hi + 1 else a + step
       val td = System.nanoTime()
       graft.operators.Ann.appendIvfShard(
         emb.where(col("vec_id") >= a && col("vec_id") < b),
         "vec_id", "embedding", dir)
-      println(f"COMPACT append_day${d + 1} ${(System.nanoTime() - td) / 1e9}%.1f s")
+      val wall = (System.nanoTime() - td) / 1e9
+      println(f"COMPACT append_day${d + 1} $wall%.1f s")
+      wall
     }
     val queries = emb.orderBy("vec_id").limit(64)
     def probe(tag: String): Unit = (1 to 3).foreach { i =>
@@ -46,13 +51,9 @@ object CompactScale {
         queries, "vec_id", "embedding", dir, k = 5, nProbe = 4).count()
       println(f"COMPACT query_$tag run$i ${(System.nanoTime() - tq) / 1e9}%.2f s ($rows rows)")
     }
-    def files(): Long = {
-      // resolve per call: the compact flips CURRENT to a new generation
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(
-        graft.operators.Ann.resolveIvfDir(spark, dir), "postings.parquet"))
-      try walk.filter(p => p.toString.endsWith(".parquet")).count()
-      finally walk.close() // Files.walk holds open directory handles
-    }
+    // resolve per call: the compact flips CURRENT to a new generation
+    def files(): Long = Harness.parquetFiles(java.nio.file.Paths.get(
+      graft.operators.Ann.resolveIvfDir(spark, dir), "postings.parquet"))
     println(s"COMPACT files_before ${files()}")
     probe("fragmented")
     val tc = System.nanoTime()
@@ -60,6 +61,15 @@ object CompactScale {
     println(f"COMPACT compact ${(System.nanoTime() - tc) / 1e9}%.1f s ($rows rows)")
     println(s"COMPACT files_after ${files()}")
     probe("compacted")
+    val rebuildDir =
+      java.nio.file.Files.createTempDirectory("compactscale-rebuild").toString
+    val tr = System.nanoTime()
+    graft.operators.Ann.buildIvfIndex(emb, "vec_id", "embedding", rebuildDir,
+      nCentroids = nCents, seed = 42L, distributedFit = true)
+    val rebuildS = (System.nanoTime() - tr) / 1e9
+    val appendMed = appendWalls.sorted.apply(appendWalls.length / 2)
+    println(f"COMPACT rebuild_s=$rebuildS%.1f append_day_med=$appendMed%.1f s " +
+      f"saving=${rebuildS / appendMed}%.1fx (n=$n)")
     spark.stop()
   }
 }

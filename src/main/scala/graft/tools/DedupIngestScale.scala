@@ -49,12 +49,6 @@ object DedupIngestScale {
       // (to a few ms of budget probing) the fold's own wall
       onFold = _ => foldWalls.synchronized {
         foldWalls += (System.nanoTime() - foldMark) / 1e9; () })
-    def indexFiles(): Long = {
-      val walk = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(dir, "index"))
-      try walk.filter(p => p.toString.endsWith(".parquet")).count()
-      finally walk.close()
-    }
     try {
       val step = math.max(1L, (hi - mid) / nBatches)
       (0 until nBatches).foreach { d =>
@@ -67,8 +61,11 @@ object DedupIngestScale {
         q.processAllAvailable()
         val folded = foldWalls.synchronized {
           val w = foldWalls.toSeq; foldWalls.clear(); w }
-        println(f"DEDUPINGEST batch${d + 1} ${(System.nanoTime() - td) / 1e9}%.1f s " +
-          s"(in=${rows.size} survivors=$lastN indexFiles=${indexFiles()}" +
+        val wall = (System.nanoTime() - td) / 1e9
+        val indexFiles =
+          Harness.parquetFiles(java.nio.file.Paths.get(dir, "index"))
+        println(f"DEDUPINGEST batch${d + 1} $wall%.1f s " +
+          s"(in=${rows.size} survivors=$lastN indexFiles=$indexFiles" +
           folded.map(w => f" fold=$w%.1f s").mkString + ")")
       }
       val total = graft.jobs.DedupIngestJob.survivors(spark, dir).count()

@@ -29,30 +29,6 @@ import org.apache.spark.sql.streaming.Trigger
   * Prints one `FOLDECON` line per fire. */
 object FoldEconScale {
 
-  private def dirBytes(dir: String): Long = {
-    val p = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.exists(p)) return 0L
-    val walk = java.nio.file.Files.walk(p)
-    try walk.filter(java.nio.file.Files.isRegularFile(_))
-      .mapToLong(java.nio.file.Files.size(_)).sum()
-    finally walk.close()
-  }
-
-  /** Bytes per generation directory (names starting with `prefix`) —
-    * the before/after diff yields the fire's WRITE VOLUME, the metric
-    * the quadratic-lifetime claim is actually about and the one this
-    * box's task-time phase noise cannot touch. */
-  private def genSizes(root: String, prefix: String): Map[String, Long] = {
-    val d = new java.io.File(root)
-    val fs = Option(d.listFiles()).getOrElse(Array.empty)
-    fs.filter(f => f.isDirectory && f.getName.startsWith(prefix))
-      .map(f => f.getName -> dirBytes(f.getPath)).toMap
-  }
-
-  private def createdBytes(before: Map[String, Long],
-                           after: Map[String, Long]): Long =
-    after.collect { case (n, b) if !before.contains(n) => b }.sum
-
   def main(args: Array[String]): Unit = {
     val srcDir = args(0)
     val which = args(1)
@@ -104,13 +80,14 @@ object FoldEconScale {
       try {
         var fire = 0
         batchRows.grouped(batchN).foreach { rows =>
-          val preBytes = dirBytes(s"$dir/index")
-          val preGens = genSizes(s"$dir/index", "base-")
+          val preBytes = Harness.dirBytes(s"$dir/index")
+          val preGens = Harness.genSizes(s"$dir/index", "base-")
           stream.addData(rows: _*)
           q.processAllAvailable()
           val walls = folds.synchronized {
             val w = folds.toSeq; folds.clear(); w }
-          val written = createdBytes(preGens, genSizes(s"$dir/index", "base-"))
+          val written = Harness.createdBytes(preGens,
+            Harness.genSizes(s"$dir/index", "base-"))
           // live generation count after the fire: 1 = the fire was a
           // major collapse, >1 = it was a minor sibling fold
           val gens = scala.util.Try(java.nio.file.Files.readString(
@@ -166,8 +143,8 @@ object FoldEconScale {
         graft.operators.Ann.appendIvfShard(
           appends.orderBy("vec_id").limit(half),
           "vec_id", "embedding", dir)
-        val preBytes = dirBytes(dir)
-        val preGens = genSizes(dir, "gen-")
+        val preBytes = Harness.dirBytes(dir)
+        val preGens = Harness.genSizes(dir, "gen-")
         val fold = meter.delta {
           if (tiered)
             graft.operators.Ann.compactIvfIndexTiered(spark, dir,
@@ -175,7 +152,8 @@ object FoldEconScale {
           else
             graft.operators.Ann.compactIvfIndex(spark, dir)
         }
-        val written = createdBytes(preGens, genSizes(dir, "gen-"))
+        val written =
+          Harness.createdBytes(preGens, Harness.genSizes(dir, "gen-"))
         println(f"FOLDECON ivf mult=$m fire=$fire " +
           f"base_vecs=${m * batchN} shard_vecs=$batchN " +
           f"pre_bytes=$preBytes written=$written wall=${fold.wallS}%.2f " +

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 /** Scale rehearsal for the streaming lexical (BM25) index family
   * ([[graft.jobs.LexIngestJob]]) — the lex analogue of the sibling
   * families' serve-under-maintenance harnesses (MaintainServeScale /
-  * ComposedIngestScale): seed a large corpus, stream batch-sized
+  * TriTenantScale): seed a large corpus, stream batch-sized
   * increments with TIERED folds firing in-loop, and hammer the index
   * from concurrent reader threads through every append, fold, and
   * deferred sweep. The envelope claims under test:
@@ -27,22 +27,6 @@ import org.apache.spark.sql.streaming.Trigger
   * [[Scale10x]] output). Prints LEXBATCH / LEXFOLD lines per event and
   * one final LEXSCALE summary line. */
 object LexIngestScale {
-
-  private def dirBytes(dir: String): Long = {
-    val p = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.exists(p)) return 0L
-    val walk = java.nio.file.Files.walk(p)
-    try walk.filter(java.nio.file.Files.isRegularFile(_))
-      .mapToLong(java.nio.file.Files.size(_)).sum()
-    finally walk.close()
-  }
-
-  private def genSizes(root: String): Map[String, Long] = {
-    val fs = Option(new java.io.File(root).listFiles())
-      .getOrElse(Array.empty)
-    fs.filter(f => f.isDirectory && f.getName.startsWith("base-"))
-      .map(f => f.getName -> dirBytes(f.getPath)).toMap
-  }
 
   def main(args: Array[String]): Unit = {
     val corpusDir = args(0)
@@ -65,7 +49,7 @@ object LexIngestScale {
     val t0 = System.nanoTime()
     graft.jobs.LexIngestJob.seed(seed, "doc_id", "toks", dir)
     println(f"LEXSEED docs=$seedN wall=${(System.nanoTime() - t0) / 1e9}%.1f " +
-      f"bytes=${dirBytes(s"$dir/index")}")
+      f"bytes=${Harness.dirBytes(s"$dir/index")}")
 
     // reader term sets: the corpus's own most frequent terms (Scale10x
     // replicas are token-bijected, so hardcoded English words would all
@@ -75,32 +59,12 @@ object LexIngestScale {
       .limit(12).select("term").as[String].collect().toSeq
     val termSets = topTerms.grouped(3).toSeq
 
-    @volatile var phase = "seeded"
-    @volatile var stopReaders = false
-    val readerErrors = new java.util.concurrent.atomic.AtomicInteger
-    val firstError = new java.util.concurrent.atomic.AtomicReference[String]
-    val latencies = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]
-    val readers = (0 until nReaders).map { r =>
-      val t = new Thread(() => {
-        var i = r
-        while (!stopReaders) {
-          val terms = termSets(i % termSets.size)
-          val ph = phase
-          val tq = System.nanoTime()
-          try {
-            graft.jobs.LexIngestJob.query(spark, dir, terms)
-              .orderBy(desc("score"), col("id")).limit(10).collect()
-            latencies.add((ph, (System.nanoTime() - tq) / 1e9)); ()
-          } catch { case e: Throwable =>
-            readerErrors.incrementAndGet()
-            firstError.compareAndSet(null,
-              s"$ph: ${e.getClass.getSimpleName}: ${e.getMessage}")
-            ()
-          }
-          i += 1
-        }
-      }, s"lex-reader-$r")
-      t.setDaemon(true); t.start(); t
+    val nextSet = new java.util.concurrent.atomic.AtomicInteger
+    val readers = Harness.Readers(nReaders, "lex-reader", phase = "seeded") {
+      val terms = termSets(nextSet.getAndIncrement() % termSets.size)
+      graft.jobs.LexIngestJob.query(spark, dir, terms)
+        .orderBy(desc("score"), col("id")).limit(10).collect()
+      ()
     }
 
     val batchRows = docs.orderBy(desc("doc_id")).limit(streamedN.toInt)
@@ -120,8 +84,8 @@ object LexIngestScale {
     try {
       var bi = 0
       batchRows.grouped(batchDocs).foreach { rows =>
-        phase = s"batch$bi"
-        val preGens = genSizes(s"$dir/index")
+        readers.phase = s"batch$bi"
+        val preGens = Harness.genSizes(s"$dir/index", "base-")
         val tb = System.nanoTime()
         stream.addData(rows: _*)
         q.processAllAvailable()
@@ -129,9 +93,8 @@ object LexIngestScale {
         println(f"LEXBATCH batch=$bi docs=${rows.size} wall=$wall%.1f")
         val fires = foldEvents.synchronized {
           val w = foldEvents.toSeq; foldEvents.clear(); w }
-        val post = genSizes(s"$dir/index")
-        val written = post.collect {
-          case (n, b) if !preGens.contains(n) => b }.sum
+        val written = Harness.createdBytes(preGens,
+          Harness.genSizes(s"$dir/index", "base-"))
         val gens = scala.util.Try(java.nio.file.Files.readString(
             java.nio.file.Paths.get(s"$dir/index/FOLDED")).trim
             .split("\\s+")(1).split(",").length).getOrElse(0)
@@ -140,11 +103,9 @@ object LexIngestScale {
         }
         bi += 1
       }
-    } finally { q.stop(); stopReaders = true }
-    readers.foreach(_.join(30000))
+    } finally { q.stop(); readers.stop() }
 
     // final exactness: served scores == batch BM25 over the full corpus
-    phase = "final"
     val exactTerms = termSets.head
     val servedMap = graft.jobs.LexIngestJob.query(spark, dir, exactTerms)
       .as[(Long, Double)].collect().toMap
@@ -153,19 +114,12 @@ object LexIngestScale {
     val exact = servedMap.keySet == wantMap.keySet &&
       wantMap.forall { case (id, w) => math.abs(servedMap(id) - w) < 1e-6 }
 
-    val byPhase = latencies.toArray(Array.empty[(String, Double)])
-      .groupBy(_._1).toSeq.sortBy(_._1)
-    byPhase.foreach { case (ph, xs) =>
-      val s = xs.map(_._2).sorted
-      println(f"LEXREAD phase=$ph n=${s.length} " +
-        f"p50=${s(s.length / 2)}%.2f p95=${s((s.length * 95) / 100)}%.2f")
-    }
+    readers.report("LEXREAD")
     println(s"LEXSCALE docs=$total batches=$batches batch_docs=$batchDocs " +
-      s"reader_errors=${readerErrors.get()} exact=$exact " +
-      s"matched=${servedMap.size} " +
-      s"first_error=${Option(firstError.get()).getOrElse("none")}")
-    require(readerErrors.get() == 0 && exact,
-      "LexIngestScale envelope violated")
+      s"exact=$exact reader_errors=${readers.errors} " +
+      s"matched=${servedMap.size}")
+    readers.requireClean()
+    require(exact, "LexIngestScale: served BM25 differs from batch BM25")
     spark.stop()
   }
 }

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
   * higher-order `transform` whose LAMBDA captures an outer column
   * ("embed this text column") died in optimizer attribute rewriting —
   * `java.util.NoSuchElementException: key not found: text#N` — once the
-  * plan grew a UNION around it, hit twice live in
-  * tools/ComposedIngestScale (lambda-embed over seed ∪ survivors, then
-  * queried through the ANN join/window tree) and sidestepped there by
+  * plan grew a UNION around it, hit twice live in the composed-ingest
+  * rehearsal, now tools/TriTenantScale (lambda-embed over seed ∪
+  * survivors, then queried through the ANN join/window tree), and
+  * sidestepped there by
   * (a) building embed-ish arrays with explicit per-index expressions and
   * (b) localCheckpoint-truncating the union's lineage before querying.
   *
@@ -37,7 +38,7 @@ class OptimizerTripSpec extends SparkSuite {
 
   private val Dims = 4
 
-  /** The workaround shape (ComposedIngestScale.fakeEmb): explicit
+  /** The workaround shape (TriTenantScale.fakeEmb): explicit
     * per-index expressions, no lambda capture. */
   private def explicitEmb(c: Column): Column =
     array((0 until Dims).map { i =>
