@@ -153,21 +153,6 @@ case class TokenGramHashes(child: Expression, fnv: Boolean)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
 
-  private def fnvFold(h0: Long, s: UTF8String): Long = {
-    // identical code-point fold to [[Fnv1a64]]
-    var h = h0
-    val str = s.toString
-    var i = 0
-    while (i < str.length) {
-      val cp = str.codePointAt(i)
-      h = (h ^ cp) * 0x100000001b3L
-      i += Character.charCount(cp)
-    }
-    h
-  }
-  private val FNV_BASIS = 0xcbf29ce484222325L
-  private val FNV_PRIME = 0x100000001b3L
-
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
@@ -176,7 +161,7 @@ case class TokenGramHashes(child: Expression, fnv: Boolean)
     while (i < n) {   // unigrams, in order
       val w = GramExpressions.token(arr, i, "TokenGramHashes")
       out(i) =
-        if (fnv) fnvFold(FNV_BASIS, w)
+        if (fnv) Fnv.hash64(w.toString)
         else XxHash64Function.hash(w, StringType, 42L)
       i += 1
     }
@@ -185,7 +170,7 @@ case class TokenGramHashes(child: Expression, fnv: Boolean)
       val w1 = GramExpressions.token(arr, i, "TokenGramHashes")
       val w2 = GramExpressions.token(arr, i + 1, "TokenGramHashes")
       out(n + i) =
-        if (fnv) fnvFold((fnvFold(FNV_BASIS, w1) ^ 0x20L) * FNV_PRIME, w2)
+        if (fnv) Fnv.fold(Fnv.step(Fnv.hash64(w1.toString), ' '), w2.toString)
         else XxHash64Function.hash(
           UTF8String.concat(w1, SPACE, w2), StringType, 42L)
       i += 1

@@ -78,20 +78,6 @@ case class SimHash64(child: Expression, seed: Long = 42L,
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
 
-  private def fnv1a64(s: UTF8String): Long = {
-    // FNV-1a, folded over code points (not UTF-8 bytes): identical to
-    // list_reduce over unicode(c) per character in the SQL oracle
-    var h = 0xcbf29ce484222325L
-    val str = s.toString
-    var i = 0
-    while (i < str.length) {
-      val cp = str.codePointAt(i)
-      h = (h ^ cp) * 0x100000001b3L
-      i += Character.charCount(cp)
-    }
-    h
-  }
-
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
@@ -100,7 +86,9 @@ case class SimHash64(child: Expression, seed: Long = 42L,
     while (j < n) {
       val t = arr.getUTF8String(j)
       if (t != null) {
-        val h = if (fnv) fnv1a64(t)
+        // FNV-1a over code points: identical to list_reduce over
+        // unicode(c) per character in the SQL oracle
+        val h = if (fnv) Fnv.hash64(t.toString)
                 else XxHash64Function.hash(t, StringType, seed)
         var b = 0
         while (b < 64) {
@@ -134,17 +122,8 @@ case class Fnv1a64(child: Expression)
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
 
-  override def nullSafeEval(input: Any): Any = {
-    var h = 0xcbf29ce484222325L
-    val str = input.asInstanceOf[UTF8String].toString
-    var i = 0
-    while (i < str.length) {
-      val cp = str.codePointAt(i)
-      h = (h ^ cp) * 0x100000001b3L
-      i += Character.charCount(cp)
-    }
-    h
-  }
+  override def nullSafeEval(input: Any): Any =
+    Fnv.hash64(input.asInstanceOf[UTF8String].toString)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -419,7 +398,7 @@ case class CdcBoundaries(child: Expression, maskBits: Int)
     val n = str.codePointCount(0, str.length)
     while (i < str.length) {
       val cp = str.codePointAt(i)
-      val gear = (0xcbf29ce484222325L ^ cp) * 0x100000001b3L
+      val gear = Fnv.step(Fnv.Basis, cp)
       h = h * 2L + gear
       pos += 1
       if ((h & mask) == 0L && pos < n) out += pos

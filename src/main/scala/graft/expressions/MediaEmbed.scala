@@ -156,16 +156,16 @@ case class MediaEmbed(child: Expression, dim: Int)
   /** Deterministic stub lane for codec-less formats: FNV-1a-64 over the
     * bytes, remixed per dimension, scaled to [-1, 1). */
   private def hashLane(b: Array[Byte]): Array[Float] = {
-    var h = 0xcbf29ce484222325L
+    var h = Fnv.Basis
     var i = 0
     while (i < b.length) {
-      h = (h ^ (b(i) & 0xff)) * 0x100000001b3L
+      h = Fnv.step(h, b(i) & 0xff)
       i += 1
     }
     val out = new Array[Float](dim)
     var k = 0
     while (k < dim) {
-      val m = (h ^ k.toLong) * 0x100000001b3L
+      val m = Fnv.step(h, k)
       val mod = ((m % 100000L) + 100000L) % 100000L
       out(k) = (mod / 50000.0 - 1.0).toFloat
       k += 1

@@ -6,21 +6,32 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** FNV-1a-64 over a string's Unicode code points, driver/executor-side —
-  * the same fold as [[Fnv1a64]]'s eval and [[graft.queries.Q.fnvSql]]'s
-  * SQL replay, shared so seeded structures (projection sign matrices, LSH
-  * sign planes) can be generated identically in Scala and rebuilt in a
-  * DuckDB oracle. */
+  * the one fold behind [[Fnv1a64]], [[SimHash64]]'s FNV mode,
+  * [[TokenGramHashes]]' FNV mode and [[CdcBoundaries]]' gear, replayed in
+  * SQL by [[graft.queries.Q.fnvSql]]; shared so seeded structures
+  * (projection sign matrices, LSH sign planes) can be generated
+  * identically in Scala and rebuilt in a DuckDB oracle. */
 object Fnv {
-  def hash64(s: String): Long = {
-    var h = 0xcbf29ce484222325L
+  val Basis = 0xcbf29ce484222325L
+  private val Prime = 0x100000001b3L
+
+  /** One FNV-1a step: fold `x` (a code point or byte value) into `h`. */
+  @inline def step(h: Long, x: Long): Long = (h ^ x) * Prime
+
+  /** [[step]] over every code point of `s` (not its UTF-8 bytes), seeded
+    * by `h0`. */
+  def fold(h0: Long, s: String): Long = {
+    var h = h0
     var i = 0
     while (i < s.length) {
       val cp = s.codePointAt(i)
-      h = (h ^ cp) * 0x100000001b3L
+      h = step(h, cp)
       i += Character.charCount(cp)
     }
     h
   }
+
+  def hash64(s: String): Long = fold(Basis, s)
 }
 
 /** Sparse random projection (Achlioptas 2003, JL lemma): maps an

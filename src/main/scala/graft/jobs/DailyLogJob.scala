@@ -24,14 +24,11 @@ object DailyLogJob {
     val logBooks = LogIngest.userBookSets(views, cap, seed)
     val queryDocs = Collections.userDocs(logBooks, fitted.bookDocs)
     val queries = RecommenderModel.assignQueries(fitted, queryDocs)
-    val scored = Recommender.recommend(fitted, queries, logBooks, params)
     // ST6 over the full log universe: a log user whose viewed books all
     // miss the doc index never reaches `queries` (inner join), but the
     // reference still writes them the hot list (log_analyze.py:234-236)
-    val logUsers = logBooks.select(col("userId"))
-    val recs = Recommender.Recs(
-      graft.rank.Blend.withFallback(scored.books, logUsers, fitted.hot, params.recCap),
-      graft.rank.Blend.withUserFallback(scored.users, logUsers, params.defaultUsers))
+    val recs = Recommender.recommend(fitted, queries, logBooks, params,
+      answerUsers = Some(logBooks))
     KVWriter.write(recs.books.select(
       TextFunctions.kvKey("b_like", col("query")).as("key"),
       TextFunctions.joinIds(col("books")).as("value")), kv)

@@ -170,7 +170,7 @@ object DedupIngestJob {
     * the move): `batch=N` append shards per component, `base-<uuid>`
     * folded generations, the FOLDED pointer carrying the ordered live
     * list, marker-first fenced folds, crashed-vs-lost discrimination. */
-  private def genLog(dir: String): graft.io.TieredGenLog =
+  private[graft] def genLog(dir: String): graft.io.TieredGenLog =
     new graft.io.TieredGenLog(s"$dir/index", Seq("banded", "shingled"),
       "dedup index")
 

@@ -33,13 +33,20 @@ object Recommender {
     * deployment-lifetime broadcast index, identical results —
     * FusedScoringSpec); build it once per deployment with
     * [[Scoring.buildServeAssets]]. Leave None for batch scoring, where
-    * the exchange pipeline's partial aggregation is the scalable plan. */
+    * the exchange pipeline's partial aggregation is the scalable plan.
+    *
+    * `answerUsers` (userId): who gets an answer, one output row per input
+    * row — scored users their recommendations, every other user the
+    * hot-list and default-user fallbacks. Defaults to the query users; a
+    * caller whose user set is wider (every event or log user) passes it
+    * here instead of running the fallbacks a second time. */
   def recommend(fitted: RecommenderModel.Fitted, queries: DataFrame,
                 ownBooks: DataFrame, p: Params = Params(),
                 filterOwn: Boolean = true,
                 corpusPostings: Option[DataFrame] = None,
                 broadcastQueries: Boolean = false,
-                serve: Option[Scoring.ServeIndex] = None): Recs = {
+                serve: Option[Scoring.ServeIndex] = None,
+                answerUsers: Option[DataFrame] = None): Recs = {
     val (candidates, simUsers) = serve match {
       case Some(idx) =>
         Scoring.fusedServeScore(queries, idx,
@@ -56,10 +63,8 @@ object Recommender {
     val own = if (filterOwn) ownBooks else ownBooks.limit(0)
     val blended = Blend.blend(candidates, fitted.hot, own,
       p.recCap, p.backfill, p.seed)
-    val books = Blend.withFallback(blended,
-      queries.select(col("userId")), fitted.hot, p.recCap)
-    val users = Blend.withUserFallback(simUsers,
-      queries.select(col("userId")), p.defaultUsers)
-    Recs(books, users)
+    val answer = answerUsers.getOrElse(queries).select(col("userId"))
+    Recs(Blend.withFallback(blended, answer, fitted.hot, p.recCap),
+      Blend.withUserFallback(simUsers, answer, p.defaultUsers))
   }
 }

@@ -149,20 +149,15 @@ object ServeJob {
           .groupBy("userId").agg(collect_set(col("bookId")).as("books"))
         (events0, queries0, collected0)
     }
-    val recs = timed("recommend")(
-      Recommender.recommend(fitted, queries, collected,
-        params, filterOwn = filterCollected, corpusPostings = corpusPostings,
-        broadcastQueries = true, serve = serve))
     // ST6: every decoded event user gets an answer — users with no query
     // context (no collections, no payload books) fall back to the hot list
     // and the default similar-user ids (the reference's evident intent on
     // scoring failure, guessLike_u_like.py:174-175,207-209; its own
     // fallback code is buggy, SURVEY §4.2).
-    val books = graft.rank.Blend.withFallback(
-      recs.books, events.select(col("userId")), fitted.hot, params.recCap)
-    val users = graft.rank.Blend.withUserFallback(
-      recs.users, events.select(col("userId")), params.defaultUsers)
-    Recommender.Recs(books, users)
+    timed("recommend")(
+      Recommender.recommend(fitted, queries, collected,
+        params, filterOwn = filterCollected, corpusPostings = corpusPostings,
+        broadcastQueries = true, serve = serve, answerUsers = Some(events)))
   }
 
   /** Collect a bounded frame and re-create it as a local relation: one

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+  IntegerType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorFunctions._
 import scala.util.Random
@@ -10,19 +12,36 @@ import scala.util.Random
 /** Approximate-nearest-neighbor search over a dense embedding column
   * (`array<float>`), for the similarity-search surface of a training-data
   * pipeline (near-dup mining, retrieval eval, hard-negative mining).
+  * Every operator returns (query_id, neighbor_id, cosine, rank).
   *
-  * Two paths:
-  *   - [[bruteForceTopK]]: exact cosine top-k via a broadcast join of the
-  *     (small) query side against the corpus — the correctness baseline and
-  *     the right plan whenever |queries| is broadcastable.
-  *   - [[lshTopK]]: random-hyperplane LSH — each vector gets `tables`
-  *     signatures of `bits` sign-bits; candidates share a signature in at
-  *     least one table, then exact cosine re-ranks. The bucket join is the
-  *     only shuffle, its keys are 1000-executor-partitionable, and the
-  *     candidate fanout is bounded by bucket occupancy — the 100 TB path.
-  *   - [[ivfTopK]]: IVF-style coarse quantization — assign every vector to
-  *     its nearest of `nCentroids` sampled centroids, probe `nProbe` nearest
-  *     centroid cells per query, exact-rank within the probed cells.
+  * Query-vs-corpus operators (broadcast queries):
+  *   - [[bruteForceTopK]]: exact cosine over the cross join — the
+  *     correctness baseline and the right plan whenever |queries| is
+  *     broadcastable.
+  *   - [[quantizedTopK]] (int8 vectors) and [[pqTopK]] (product-quantized
+  *     codes): a cheap coarse score keeps a `k · shortlistFactor`
+  *     shortlist per query, which exact cosine re-ranks.
+  *
+  * All-pairs operators over one corpus (candidates join on ids only):
+  *   - [[lshTopK]] / [[lshTopKSignPlanes]]: random-hyperplane LSH —
+  *     candidates share a signature in at least one of `tables` tables.
+  *     The bucket join is the only shuffle and its fanout is bounded by
+  *     bucket occupancy — the 100 TB path.
+  *   - [[ivfTopK]]: IVF coarse quantization — every vector's home cell
+  *     among `nCentroids` trained centroids, `nProbe` probe cells per
+  *     query.
+  *
+  * Persisted IVF: [[buildIvfIndex]] / [[appendIvfShard]] / the compact and
+  * sweep operations maintain a generational index on disk;
+  * [[queryIvfIndex]] probes it per query batch and [[ivfThresholdHits]]
+  * is the query-corpus threshold probe.
+  *
+  * Shared stages: one per-query top-k window (`rankTopK`: round(cosine, 6)
+  * desc, neighbor_id asc), one shortlist re-rank (`rerankShortlist`), one
+  * all-pairs re-rank tail with its cache contract (`rerankAllPairs`) and
+  * one centroid table (`centroidTable`). With a full shortlist
+  * (quantized, PQ) or a full probe (IVF) those operators return exactly
+  * [[bruteForceTopK]]'s rows, tie order included.
   *
   * Hyperplanes/centroids are seeded, never `Math.random` — results are
   * reproducible across runs and partitionings.
@@ -36,14 +55,48 @@ object Ann {
                      broadcastQueries: Boolean = true): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val joined = (if (broadcastQueries) c.crossJoin(broadcast(q)) else c.crossJoin(q))
+    rankTopK((if (broadcastQueries) c.crossJoin(broadcast(q)) else c.crossJoin(q))
       .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
+      .withColumn("cosine", cosine(col("qv"), col("cv"))), k)
+  }
+
+  /** The per-query top-k window every operator here ends in: ties on
+    * `round(cosine, 6)` (float noise across plans) break toward the
+    * smaller `neighbor_id`, so any two operators that see the same
+    * candidates return the same rows. */
+  private def rankTopK(cand: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(round(col("cosine"), 6).desc, col("neighbor_id").asc)
-    joined.withColumn("rank", row_number().over(w))
+    cand.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select("query_id", "neighbor_id", "cosine", "rank")
+  }
+
+  /** Empty input → an empty result with the output schema. */
+  private def emptyTopK(spark: SparkSession, idType: DataType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+      StructField("query_id", idType), StructField("neighbor_id", idType),
+      StructField("cosine", DoubleType), StructField("rank", IntegerType))))
+
+  /** Shortlist re-rank shared by [[quantizedTopK]] and [[pqTopK]]: keep
+    * the top `k · shortlistFactor` of a coarse (query_id, neighbor_id,
+    * qcos) frame per query, re-attach both float vectors (queries
+    * broadcast), and rank by exact cosine. */
+  private def rerankShortlist(coarse: DataFrame, queries: DataFrame,
+                              corpus: DataFrame, idCol: String,
+                              vecCol: String, k: Int,
+                              shortlistFactor: Int): DataFrame = {
+    val wq = Window.partitionBy("query_id")
+      .orderBy(round(col("qcos"), 6).desc, col("neighbor_id").asc)
+    val short = coarse.withColumn("crank", row_number().over(wq))
+      .where(col("crank") <= k * shortlistFactor)
+      .select("query_id", "neighbor_id")
+    rankTopK(short
+      .join(broadcast(queries.select(col(idCol).as("query_id"),
+        col(vecCol).as("qv"))), "query_id")
+      .join(corpus.select(col(idCol).as("neighbor_id"),
+        col(vecCol).as("cv")), "neighbor_id")
+      .withColumn("cosine", cosine(col("qv"), col("cv"))), k)
   }
 
   /** Quantized brute-force top-k: the coarse pass scores int8-quantized
@@ -72,22 +125,7 @@ object Ann {
     val coarse = c8.crossJoin(broadcast(q8))
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("qcos", int8Cosine(col("qq"), col("cq")))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(round(col("qcos"), 6).desc, col("neighbor_id").asc)
-    val short = coarse.withColumn("crank", row_number().over(wq))
-      .where(col("crank") <= k * shortlistFactor)
-      .select("query_id", "neighbor_id")
-    val rescored = short
-      .join(broadcast(queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("qv"))), "query_id")
-      .join(corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("cv")), "neighbor_id")
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(round(col("cosine"), 6).desc, col("neighbor_id").asc)
-    rescored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+    rerankShortlist(coarse, queries, corpus, idCol, vecCol, k, shortlistFactor)
   }
 
   /** Product-quantization top-k (Jégou et al. 2011): corpus vectors are
@@ -123,12 +161,7 @@ object Ann {
       .select("sv").collect()
       .map(r => norml(r.getSeq[Double](0).toArray))
     if (sample.isEmpty)
-      return queries.sparkSession.emptyDataFrame
-        .select(lit(null).cast(corpus.schema(idCol).dataType).as("query_id"),
-          lit(null).cast(corpus.schema(idCol).dataType).as("neighbor_id"),
-          lit(null).cast("double").as("cosine"),
-          lit(null).cast("int").as("rank"))
-        .limit(0)
+      return emptyTopK(queries.sparkSession, corpus.schema(idCol).dataType)
     val dim = sample(0).length
     require(dim % m == 0, s"vector dim $dim must divide by m=$m")
     val dsub = dim / m
@@ -144,22 +177,7 @@ object Ann {
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("qcos", column(graft.expressions.PqScore(
         expression(col("qv")), expression(col("codes")), codebooks)))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(round(col("qcos"), 6).desc, col("neighbor_id").asc)
-    val short = coarse.withColumn("crank", row_number().over(wq))
-      .where(col("crank") <= k * shortlistFactor)
-      .select("query_id", "neighbor_id")
-    val rescored = short
-      .join(broadcast(queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("qv"))), "query_id")
-      .join(corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("cv")), "neighbor_id")
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(round(col("cosine"), 6).desc, col("neighbor_id").asc)
-    rescored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+    rerankShortlist(coarse, queries, corpus, idCol, vecCol, k, shortlistFactor)
   }
 
   /** Seeded random hyperplanes: `tables` x `bits` unit-free gaussian
@@ -243,36 +261,39 @@ object Ann {
       .select(col("id"), col("b.table"), col("b.sig"))
     val l = bucketed.select(col("table"), col("sig"), col("id").as("query_id"))
     val r = bucketed.select(col("table"), col("sig"), col("id").as("neighbor_id"))
-    val cand = l.join(r, Seq("table", "sig"))
+    rerankAllPairs(vecs, l.join(r, Seq("table", "sig")), k)
+  }
+
+  /** All-pairs exact re-rank shared by the LSH lanes and [[ivfTopK]]:
+    * the id-only candidate join's (query_id, neighbor_id) pairs, self-pairs
+    * dropped and deduplicated, get both vectors re-attached from `vecs`
+    * (a persisted (id, v) frame), exact cosine and the top-k window. */
+  private def rerankAllPairs(vecs: DataFrame, pairs: DataFrame,
+                             k: Int): DataFrame = {
+    val scored = pairs
       .where(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id")
       .dropDuplicates("query_id", "neighbor_id")
       .join(vecs.select(col("id").as("query_id"), col("v").as("qv")), "query_id")
       .join(vecs.select(col("id").as("neighbor_id"), col("v").as("cv")), "neighbor_id")
-    val scored = cand.withColumn("cosine", cosine(col("qv"), col("cv")))
-      // Pin the rank stage's width (all-pairs lanes only): the window's
-      // auto-inserted exchange carries just (ids, cosine) — a few MB even
-      // for millions of candidate rows — so AQE's byte-sized coalescing
-      // can legally fuse it down to ONE task, serializing the expensive
-      // per-row rank work (sort + HALF_UP rounding) over the whole
-      // candidate set. Measured at the 10× rehearsal as a bimodal
-      // ~2 s / ~30 s wall on identical seeded runs. A NUMBERED
-      // repartition on the window key satisfies the window's required
-      // distribution (EnsureRequirements adds no second exchange) and is
-      // exempt from AQE coalescing — deterministic full-width ranking,
-      // identical output rows.
+      .withColumn("cosine", cosine(col("qv"), col("cv")))
+      // Pin the rank stage's width: the window's auto-inserted exchange
+      // carries just (ids, cosine) — a few MB even for millions of
+      // candidate rows — so AQE's byte-sized coalescing can legally fuse
+      // it down to ONE task, serializing the expensive per-row rank work
+      // (sort + HALF_UP rounding) over the whole candidate set. Measured
+      // at the 10× rehearsal as a bimodal ~2 s / ~30 s wall on identical
+      // seeded runs. A NUMBERED repartition on the window key satisfies
+      // the window's required distribution (EnsureRequirements adds no
+      // second exchange) and is exempt from AQE coalescing —
+      // deterministic full-width ranking, identical output rows.
       .repartition(vecs.sparkSession.sessionState.conf.numShufflePartitions,
         col("query_id"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(round(col("cosine"), 6).desc, col("neighbor_id").asc)
-    val ranked = scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
     // Cache contract (same as Dedup.minHashLsh): materialize the n*k-sized
     // result into a persist the CALLER owns, then release the internal
     // vector cache — repeated calls retain nothing but their returned
     // handle.
-    val out = ranked.persist(StorageLevel.MEMORY_AND_DISK)
+    val out = rankTopK(scored, k).persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
     vecs.unpersist()
     out
@@ -326,21 +347,8 @@ object Ann {
       if (distributedFit)
         trainCentroidsDistributed(data, idCol, vecCol, nCentroids, seed)
       else trainCentroids(data, idCol, vecCol, nCentroids, seed)
-    if (centsOpt.isEmpty) {
-      // empty input → empty result with the output schema, like every
-      // other operator here
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("query_id",
-            data.schema(idCol).dataType),
-          org.apache.spark.sql.types.StructField("neighbor_id",
-            data.schema(idCol).dataType),
-          org.apache.spark.sql.types.StructField("cosine",
-            org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("rank",
-            org.apache.spark.sql.types.IntegerType))))
-    }
+    if (centsOpt.isEmpty)
+      return emptyTopK(spark, data.schema(idCol).dataType)
     val cents = centsOpt.get
     // one centroid scoring pass: rn == 1 is the home cell (assignment),
     // rn <= nProbe are the probe cells — no second cross join. The cell
@@ -354,34 +362,9 @@ object Ann {
     val assigned = cells.where(col("rn") === 1)
     val l = cells.select(col("cell"), col("id").as("query_id"))
     val r = assigned.select(col("cell"), col("id").as("neighbor_id"))
-    val cand = l.join(r, Seq("cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id")
-      .dropDuplicates("query_id", "neighbor_id")
-      .join(vecs.select(col("id").as("query_id"), col("v").as("qv")), "query_id")
-      .join(vecs.select(col("id").as("neighbor_id"), col("v").as("cv")), "neighbor_id")
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-      // Same rank-width pin as lshTopK (see there): keep AQE from fusing
-      // the skinny candidate shuffle into a single-task window stage.
-      .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("query_id"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(round(col("cosine"), 6).desc, col("neighbor_id").asc)
-    val ranked = cand.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
-    // Same caller-owned-result cache contract as lshTopK.
-    val out = ranked.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    vecs.unpersist()
-    out
+    rerankAllPairs(vecs, l.join(r, Seq("cell")), k)
   }
 
-  /** Deterministic local Lloyd's k-means over the bounded centroid-training
-    * sample: init = first k sample points (the sample is already in seeded
-    * hash order, so this is a seeded random init), then `iters` rounds of
-    * assign-to-nearest + recompute means. Empty cells keep their previous
-    * center. Euclidean assignment — standard for IVF coarse quantizers. */
   /** IVF-routed threshold PROBE, query-corpus form (the scale path for
     * [[Decontaminate.semantic]] when the benchmark side outgrows a
     * broadcast): coarse centroids are trained on a seeded benchmark
@@ -412,17 +395,7 @@ object Ann {
       return corpus.select(col(idCol)).limit(0)
     val centers = lloyd(sampled, math.min(nCentroids, sampled.length),
       iters = 10)
-    val centerRows = centers.zipWithIndex.map { case (c, i) =>
-      org.apache.spark.sql.Row(i, c.toSeq)
-    }.toSeq
-    val cents = spark.createDataFrame(
-      spark.sparkContext.parallelize(centerRows, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cid",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("cvec",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)))))
+    val cents = centroidTable(spark, centers)
     // benchmark vectors keep only their HOME cell (rn == 1); any unique
     // per-row id works as the window key — the home cell is a pure argmax
     // over the broadcast centroid table
@@ -438,6 +411,11 @@ object Ann {
       .select(col("id").as(idCol)).distinct()
   }
 
+  /** Deterministic local Lloyd's k-means over the bounded centroid-training
+    * sample: init = first k sample points (the sample is already in seeded
+    * hash order, so this is a seeded random init), then `iters` rounds of
+    * assign-to-nearest + recompute means. Empty cells keep their previous
+    * center. Euclidean assignment — standard for IVF coarse quantizers. */
   private def lloyd(points: Array[Array[Double]], k: Int,
                     iters: Int): Array[Array[Double]] = {
     val dim = points.head.length
@@ -469,9 +447,6 @@ object Ann {
     centers
   }
 
-  /** Nearest `nCells` centroid ids per vector via broadcast centroid join;
-    * keeps `rn` so callers can distinguish the home cell (rn == 1) from
-    * probe cells. */
   /** Seeded coarse-centroid training shared by [[ivfTopK]] and
     * [[buildIvfIndex]]: a BOUNDED hash-ordered sample (nCentroids · 20
     * rows) to the driver, local Lloyd's — the way IVF quantizers train
@@ -485,19 +460,20 @@ object Ann {
       .select(col("cvec")).collect()
       .map(_.getSeq[Double](0).toArray)
     if (sampled.isEmpty) return None
-    val centers = lloyd(sampled, math.min(nCentroids, sampled.length), iters = 10)
-    val centerRows = centers.zipWithIndex.map { case (c, i) =>
-      org.apache.spark.sql.Row(i, c.toSeq)
-    }.toSeq
-    Some(spark.createDataFrame(
-      spark.sparkContext.parallelize(centerRows, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cid",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("cvec",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType))))))
+    Some(centroidTable(spark,
+      lloyd(sampled, math.min(nCentroids, sampled.length), iters = 10)))
   }
+
+  /** The (cid int, cvec array<double>) centroid table every IVF path
+    * probes: one row per center, `cid` = its position, one partition. */
+  private def centroidTable(spark: SparkSession,
+                            centers: Array[Array[Double]]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        centers.zipWithIndex.map { case (c, i) => Row(i, c.toSeq) }.toSeq, 1),
+      StructType(Seq(
+        StructField("cid", IntegerType),
+        StructField("cvec", ArrayType(DoubleType)))))
 
   /** Distributed coarse-centroid training (MLlib KMeans) — the fit for the
     * nCentroids ∝ n regime, where [[trainCentroids]]'s driver sample
@@ -520,18 +496,7 @@ object Ann {
       .setK(nCentroids).setSeed(seed).setMaxIter(8)
       .setInitMode("random")
       .setFeaturesCol("features").setPredictionCol("__cell")
-    val model = km.fit(feats)
-    val centerRows = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-      org.apache.spark.sql.Row(i, c.toArray.toSeq)
-    }.toSeq
-    Some(spark.createDataFrame(
-      spark.sparkContext.parallelize(centerRows, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cid",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("cvec",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType))))))
+    Some(centroidTable(spark, km.fit(feats).clusterCenters.map(_.toArray)))
   }
 
   /** Build a PERSISTED IVF index under `dir` — the serving-plane form of
@@ -1527,11 +1492,7 @@ object Ann {
       .where(col("query_id") =!= col("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
       .withColumn("cosine", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(round(col("cosine"), 6).desc, col("neighbor_id").asc)
-    cand.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+    rankTopK(cand, k)
   }
 
   /** Cluster a postings frame by its `cell` partition column before a
@@ -1552,7 +1513,11 @@ object Ann {
       col("cell"))
   }
 
-  /** `statsMult`: when > 1, size the window's hash(id) exchange for the
+  /** Nearest `nCells` centroid ids per vector via broadcast centroid join;
+    * keeps `rn` so callers can distinguish the home cell (rn == 1) from
+    * probe cells.
+    *
+    * `statsMult`: when > 1, size the window's hash(id) exchange for the
     * CROSS-JOINED volume — rows × centroids, which plan statistics (taken
     * before the join) understate by the centroid count. The sizing is an
     * explicit `repartition(n, id)` so it is pinned IN the plan: it

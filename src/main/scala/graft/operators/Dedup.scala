@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.functions.TextFunctions
 
@@ -301,7 +302,6 @@ object Dedup {
                              shingleN: Int, bands: Int, rows: Int,
                              minJaccard: Double,
                              maxBucket: Long): (DataFrame, DataFrame) = {
-    val numHashes = bands * rows
     // cached once: referenced by the signature stage and twice more when
     // shingle sets re-attach to candidates. MEMORY_AND_DISK persist (NOT
     // localCheckpoint): blocks spill to executor disk but keep lineage, so
@@ -315,15 +315,10 @@ object Dedup {
     // lazily-populated cache would race them into computing the shingle
     // projection up to three times
     sh.count()
-    val sig = sh.withColumn("sig", minHashSignature(col("sh"), numHashes))
     // the band join carries only (band, bucket, id) — shingle arrays are
     // re-attached to the (deduplicated) candidate pairs afterwards, so the
     // wide payload never multiplies through the bands x docs explode
-    val banded = sig.select(
-      col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        bi => xxhash64(slice(col("sig"), bi * lit(rows) + 1, lit(rows))))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+    val banded = bandKeys(sh, bands, rows)
     // Skew guard: a bucket holding k docs contributes k^2 candidate pairs;
     // buckets above `maxBucket` are degenerate (non-discriminative band
     // collisions on near-uniform corpora) and would quadratically blow up
@@ -475,54 +470,17 @@ object Dedup {
   def dedupCorpusStaged(docs: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3, bands: Int = 12, rows: Int = 8,
                         minJaccard: Double = 0.8, maxBucket: Long = 200L,
-                        smallGraphThreshold: Int = 1 << 20): Staged = {
-    require(smallGraphThreshold >= 0, "smallGraphThreshold must be >= 0")
-    val spark = docs.sparkSession
-    // partitions ∝ data via plan statistics (no action — this entry point
-    // takes arbitrary computed frames, and counting one would re-execute
-    // its upstream). Floor-clamped: small-scale gate plans are unchanged.
-    // When CorpusPrep already raised the setting from its row count, this
-    // no-ops inside that scope.
-    Tuning.withAutoShuffleBytes(docs) {
-    val (pairsPlan, sh) = lshPairsStaged(docs, idCol, textCol, shingleN,
-      bands, rows, minJaccard, maxBucket)
-    // Persist + count FIRST: one full execution of the pair pipeline, then
-    // both the path decision and the chosen path read the cache. (take(n)
-    // here instead would re-run the verify stage under incremental-limit
-    // scale-up AND leave the pipeline unexecuted for the fall-through.)
-    val p = pairsPlan.select(col("a"), col("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nPairs = p.count()
-    sh.unpersist()   // pairs are materialized; the shingle cache is dead
-    if (nPairs <= smallGraphThreshold) {   // threshold 0 ⇒ always distributed
-      val taken = p.collect()              // a cache scan, nPairs is bounded
-      p.unpersist()
-      if (taken.isEmpty) Staged(docs, () => ())
-      else {
-        val losers = unionFindLosers(taken)
-        val idType = docs.schema(idCol).dataType
-        val loserRows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(
-            losers.map(org.apache.spark.sql.Row(_)): _*)
-        val loserDf = spark.createDataFrame(loserRows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(idCol, idType))))
-        Staged(
-          docs.join(broadcast(loserDf), Seq(idCol), "left_anti"), () => ())
-      }
-    } else {
-      val labels = propagateLabels(p, maxIter = 5)
-      p.unpersist()
-      val losers = labels.where(col("id") =!= col("canonical"))
-        .select(col("id").as(idCol))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      losers.count()
-      labels.unpersist()
-      Staged(docs.join(losers, Seq(idCol), "left_anti"),
-        () => losers.unpersist())
-    }
-    } // withAutoShuffleBytes
-  }
+                        smallGraphThreshold: Int = 1 << 20): Staged =
+    resolveDuplicates(docs, idCol, textCol, shingleN, bands, rows,
+        minJaccard, maxBucket, smallGraphThreshold)(
+      // survivors = the corpus minus every node that is not its
+      // cluster's root (the root is the cluster's smallest id)
+      roots => localFrame(docs.sparkSession,
+        Seq(idCol -> docs.schema(idCol).dataType),
+        roots.iterator.collect { case (k, r) if k != r => Row(k) }.toSeq),
+      labels => labels.where(col("id") =!= col("canonical"))
+        .select(col("id").as(idCol)),
+      losers => docs.join(losers, Seq(idCol), "left_anti"))
 
   /** Corpus dedup keeping the BEST document per duplicate cluster —
     * argmax of `rankCol` (a quality/length/recency score), ties broken
@@ -550,49 +508,73 @@ object Dedup {
                                 shingleN: Int = 3, bands: Int = 12,
                                 rows: Int = 8, minJaccard: Double = 0.8,
                                 maxBucket: Long = 200L,
-                                smallGraphThreshold: Int = 1 << 20): Staged = {
+                                smallGraphThreshold: Int = 1 << 20): Staged =
+    resolveDuplicates(docs, idCol, textCol, shingleN, bands, rows,
+        minJaccard, maxBucket, smallGraphThreshold)(
+      // id -> cluster root for every pair-graph node; the ids ride the
+      // driver (bounded by the threshold), the rank values never do
+      roots => {
+        val idType = docs.schema(idCol).dataType
+        localFrame(docs.sparkSession,
+          Seq("__id" -> idType, "__cluster" -> idType),
+          roots.toSeq.map { case (id, r) => Row(id, r) })
+      },
+      labels => labels.select(col("id").as("__id"),
+        col("canonical").as("__cluster")),
+      members => keepBestSurvivors(docs, members, idCol, rankCol))
+
+  /** The cluster resolution both corpus-dedup variants share (see
+    * [[dedupCorpus]]). The LSH pairs are persisted and counted FIRST: one
+    * execution of the pair pipeline, read by both the path decision and
+    * the chosen path (take(n) here would re-run the verify stage under
+    * incremental-limit scale-up AND leave the pipeline unexecuted for the
+    * fall-through). No pairs: the corpus as is. At most
+    * `smallGraphThreshold` pairs: the driver-side union-find, whose
+    * id -> root map `local` turns into the variant's frame, which
+    * `survivors` reads as a broadcast. Above it: min-label propagation,
+    * whose (id, canonical) labels `slim` projects to the variant's frame,
+    * persisted and counted here and released by the returned hook. */
+  private def resolveDuplicates(docs: DataFrame, idCol: String,
+                                textCol: String, shingleN: Int, bands: Int,
+                                rows: Int, minJaccard: Double,
+                                maxBucket: Long, smallGraphThreshold: Int)(
+      local: Map[Any, Any] => DataFrame,
+      slim: DataFrame => DataFrame,
+      survivors: DataFrame => DataFrame): Staged = {
     require(smallGraphThreshold >= 0, "smallGraphThreshold must be >= 0")
-    val spark = docs.sparkSession
-    // same partitions-∝-data hint as [[dedupCorpusStaged]]
+    // partitions ∝ data via plan statistics (no action — the entry points
+    // take arbitrary computed frames, and counting one would re-execute
+    // its upstream). Floor-clamped: small-scale gate plans are unchanged.
+    // When CorpusPrep already raised the setting from its row count, this
+    // no-ops inside that scope.
     Tuning.withAutoShuffleBytes(docs) {
-    val (pairsPlan, sh) = lshPairsStaged(docs, idCol, textCol, shingleN,
-      bands, rows, minJaccard, maxBucket)
-    val p = pairsPlan.select(col("a"), col("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nPairs = p.count()
-    sh.unpersist()
-    val idType = docs.schema(idCol).dataType
-    if (nPairs <= smallGraphThreshold) {
-      val taken = p.collect()
-      p.unpersist()
-      if (taken.isEmpty) Staged(docs, () => ())
-      else {
-        // id -> cluster root for every pair-graph node; the ids ride the
-        // driver (bounded by the threshold), the rank values never do
-        val memberRows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(unionFindRoots(taken).toSeq.map { case (id, r) =>
-            org.apache.spark.sql.Row(id, r)
-          }: _*)
-        val memberDf = spark.createDataFrame(memberRows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("__id", idType),
-            org.apache.spark.sql.types.StructField("__cluster", idType))))
-        Staged(keepBestSurvivors(docs, broadcast(memberDf), idCol, rankCol),
-          () => ())
-      }
-    } else {
-      val labels = propagateLabels(p, maxIter = 5)
-      p.unpersist()
-      val members = labels
-        .select(col("id").as("__id"), col("canonical").as("__cluster"))
+      val (pairsPlan, sh) = lshPairsStaged(docs, idCol, textCol, shingleN,
+        bands, rows, minJaccard, maxBucket)
+      val p = pairsPlan.select(col("a"), col("b"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      members.count()
-      labels.unpersist()
-      Staged(keepBestSurvivors(docs, members, idCol, rankCol),
-        () => members.unpersist())
+      val nPairs = p.count()
+      sh.unpersist()   // pairs are materialized; the shingle cache is dead
+      if (nPairs <= smallGraphThreshold) {   // threshold 0 ⇒ always distributed
+        val taken = p.collect()              // a cache scan, nPairs is bounded
+        p.unpersist()
+        if (taken.isEmpty) Staged(docs, () => ())
+        else Staged(survivors(broadcast(local(unionFindRoots(taken)))), () => ())
+      } else {
+        val labels = propagateLabels(p, maxIter = 5)
+        p.unpersist()
+        val kept = slim(labels).persist(StorageLevel.MEMORY_AND_DISK)
+        kept.count()
+        labels.unpersist()
+        Staged(survivors(kept), () => kept.unpersist())
+      }
     }
-    } // withAutoShuffleBytes
   }
+
+  /** A driver-side local relation of `rows` under `fields`. */
+  private def localFrame(spark: SparkSession, fields: Seq[(String, DataType)],
+                         rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(fields.map { case (n, t) => StructField(n, t) }))
 
   /** Survivor selection for [[dedupCorpusKeepBest]]: rank cluster members
     * (and only members) by (rank desc, id asc) within their cluster; every
@@ -609,18 +591,12 @@ object Dedup {
   }
 
   /** Driver-side union-find over a BOUNDED collected pair list (union by
-    * min representative + full path compression): the cluster root is the
-    * cluster's smallest id, so "losers" = every node whose root is not
-    * itself. Ids must be mutually Comparable (numeric/string — anything the
-    * pair join could have equated). */
-  private def unionFindLosers(pairs: Array[org.apache.spark.sql.Row]): Seq[Any] =
-    unionFindRoots(pairs).iterator.collect { case (k, r) if k != r => k }.toSeq
-
-  /** [[unionFindLosers]]'s underlying id -> cluster-root map (root = the
-    * cluster's smallest id), for callers that need the full membership
-    * (e.g. [[dedupCorpusKeepBest]]'s argmax survivor pick). */
+    * min representative + full path compression): the id -> cluster-root
+    * map, root = the cluster's smallest id. Ids must be mutually
+    * Comparable (numeric/string — anything the pair join could have
+    * equated). */
   private[operators] def unionFindRoots(
-      pairs: Array[org.apache.spark.sql.Row]): Map[Any, Any] = {
+      pairs: Array[Row]): Map[Any, Any] = {
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]
     def find(x: Any): Any = {
       var root = x
@@ -658,16 +634,20 @@ object Dedup {
   /** Build the (id, band, bucket) + (id, sh) index frames for a corpus. */
   def lshIndex(docs: DataFrame, idCol: String, textCol: String,
                shingleN: Int, bands: Int, rows: Int): LshIndex = {
-    val numHashes = bands * rows
     val sh = docs.select(col(idCol).as("id"),
       shingles(col(textCol), shingleN).as("sh"))
-    val banded = sh.withColumn("sig", minHashSignature(col("sh"), numHashes))
+    LshIndex(bandKeys(sh, bands, rows), sh.select(col("id"), col("sh")))
+  }
+
+  /** The (id, band, bucket) banding of an (id, sh) shingle frame: a
+    * `bands · rows` MinHash signature, one xxhash64 bucket per band of
+    * `rows` hashes. */
+  private def bandKeys(sh: DataFrame, bands: Int, rows: Int): DataFrame =
+    sh.withColumn("sig", minHashSignature(col("sh"), bands * rows))
       .select(col("id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           bi => xxhash64(slice(col("sig"), bi * lit(rows) + 1, lit(rows))))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    LshIndex(banded, sh.select(col("id"), col("sh")))
-  }
 
   /** Incremental near-dup pairs: (a = new doc id, b = corpus doc id,
     * jaccard) for new docs colliding with the indexed corpus in any band

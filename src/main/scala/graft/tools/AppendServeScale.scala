@@ -32,11 +32,13 @@ object AppendServeScale {
       .persist(); queries.count()
 
     val dir = java.nio.file.Files.createTempDirectory("appendserve").toString
+    val nBase = base.count()
+    val nCentroids = math.max(16, math.ceil(math.sqrt(nBase.toDouble)).toInt)
     val t0 = System.nanoTime()
     graft.operators.Ann.buildIvfIndex(base, "vec_id", "embedding", dir,
-      nCentroids = 256, seed = 42L, distributedFit = true)
+      nCentroids = nCentroids, seed = 42L, distributedFit = true)
     println(f"TIMING build_base ${(System.nanoTime() - t0) / 1e9}%.1f s " +
-      s"(rows=${base.count()})")
+      s"(rows=$nBase cells=$nCentroids)")
 
     // generation observed = committed shard count at plan time (the
     // marker files — inside postings.parquet/ — are the commit

@@ -90,9 +90,8 @@ object FoldEconScale {
             Harness.genSizes(s"$dir/index", "base-"))
           // live generation count after the fire: 1 = the fire was a
           // major collapse, >1 = it was a minor sibling fold
-          val gens = scala.util.Try(java.nio.file.Files.readString(
-              java.nio.file.Paths.get(s"$dir/index/FOLDED")).trim
-              .split("\\s+")(1).split(",").length).getOrElse(0)
+          val gens = graft.jobs.DedupIngestJob.genLog(dir).readState(spark)
+            .map(_.gens.size).getOrElse(0)
           walls.foreach { case (w, taskS) =>
             fire += 1
             println(f"FOLDECON dedup mult=$m fire=$fire " +

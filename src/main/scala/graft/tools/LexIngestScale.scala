@@ -95,9 +95,8 @@ object LexIngestScale {
           val w = foldEvents.toSeq; foldEvents.clear(); w }
         val written = Harness.createdBytes(preGens,
           Harness.genSizes(s"$dir/index", "base-"))
-        val gens = scala.util.Try(java.nio.file.Files.readString(
-            java.nio.file.Paths.get(s"$dir/index/FOLDED")).trim
-            .split("\\s+")(1).split(",").length).getOrElse(0)
+        val gens = graft.jobs.LexIngestJob.genLog(dir).readState(spark)
+          .map(_.gens.size).getOrElse(0)
         fires.foreach { case (b, w) =>
           println(f"LEXFOLD batch=$b wall=$w%.1f written=$written gens=$gens")
         }

@@ -147,4 +147,18 @@ class GramKernelSpec extends SparkSuite {
         msgs.mkString(" | "))
     }
   }
+
+  test("only Fnv's file holds the FNV-1a-64 prime under src/main/scala") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"$root not found")
+    val walk = java.nio.file.Files.walk(root)
+    val holders =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter(p => java.nio.file.Files.readString(p).contains("0x100000001b3L"))
+        .map(p => root.relativize(p).toString).toList
+      finally walk.close()
+    assert(holders == List("graft/expressions/ProjectionExpressions.scala"),
+      s"FNV-1a-64 folds outside expressions.Fnv: $holders")
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 import graft.operators.Ann
@@ -58,6 +59,45 @@ class QuantAnnSpec extends SparkSuite {
     val perQuery = Ann.quantizedTopK(queries, emb, "vec_id", "embedding", k)
       .groupBy("query_id").agg(count(lit(1)).as("n"), max("rank").as("mr"))
     assert(perQuery.where(col("n") =!= k || col("mr") =!= k).count() === 0)
+  }
+
+  test("at full shortlist / full probe, quantizedTopK, pqTopK, ivfTopK and " +
+      "queryIvfIndex equal bruteForceTopK row for row") {
+    // 24 vectors plus four more copies of vectors 0-3 under new ids: the
+    // copies tie on cosine, and k = 3 cuts through each 4-way tie, so only
+    // the neighbor_id tie-break decides which rows come back
+    val base = emb.where(col("vec_id") < 24).select("vec_id", "embedding")
+    val data = (1 to 4).foldLeft(base) { (acc, c) =>
+      acc.unionByName(emb.where(col("vec_id") < 4)
+        .select((col("vec_id") + c * 1000L).as("vec_id"), col("embedding")))
+    }.persist()
+    val n = data.count().toInt
+    val k = 3
+    def rows(df: DataFrame) =
+      df.select("query_id", "neighbor_id", "cosine", "rank")
+        .orderBy("query_id", "rank").collect().toSeq
+    val exact = rows(Ann.bruteForceTopK(data, data, "vec_id", "embedding", k))
+    val cut = Ann.bruteForceTopK(data, data, "vec_id", "embedding", n)
+      .where(col("query_id") === 0L && col("rank").isin(k, k + 1))
+      .select(round(col("cosine"), 6)).collect().map(_.getDouble(0)).toSeq
+    assert(cut.length == 2 && cut(0) == cut(1), s"no tie across rank $k: $cut")
+    val shortlistFactor = (n - 1 + k - 1) / k   // k · shortlistFactor >= n - 1
+    val cells = 4
+    val dir = java.nio.file.Files.createTempDirectory("fullprobe").toString
+    Ann.buildIvfIndex(data, "vec_id", "embedding", dir, nCentroids = cells)
+    val ivf = Ann.ivfTopK(data, "vec_id", "embedding", k,
+      nCentroids = cells, nProbe = cells)
+    try {
+      Seq(
+        "quantizedTopK" -> Ann.quantizedTopK(data, data, "vec_id", "embedding",
+          k, shortlistFactor = shortlistFactor),
+        "pqTopK" -> Ann.pqTopK(data, data, "vec_id", "embedding", k,
+          shortlistFactor = shortlistFactor),
+        "ivfTopK" -> ivf,
+        "queryIvfIndex" -> Ann.queryIvfIndex(data, "vec_id", "embedding", dir,
+          k, nProbe = cells)
+      ).foreach { case (name, df) => assert(rows(df) == exact, name) }
+    } finally { ivf.unpersist(); data.unpersist() }
   }
 }
 
