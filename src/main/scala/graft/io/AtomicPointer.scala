@@ -21,8 +21,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * at any point leaves one of the two generations readable, never
   * neither.
   *
-  * Read path ([[read]]): primary, then aside, with a bounded
-  * retry absorbing the exists/open race against a non-atomic flip.
+  * Read path ([[read]]): primary, then aside, then primary again, with a
+  * bounded retry absorbing the exists/open race against a non-atomic
+  * flip.
   *
   * Checksum sidecars: on a ChecksumFileSystem (the local FS) the data
   * file and its `.crc` are replaced by SEPARATE renames, so a reader
@@ -40,14 +41,18 @@ object AtomicPointer {
     case other => other
   }
 
+  /** The aside copy's file name, and the prefix of every flip tmp. */
+  private[io] def asideName(name: String): String = s".$name.old"
+  private[io] def tmpPrefix(name: String): String = s".$name.tmp"
+
   private def asidePath(dir: String, name: String) =
-    new Path(s"$dir/.$name.old")
+    new Path(s"$dir/${asideName(name)}")
 
   /** Read the pointer content (trimmed): primary first, then the aside
-    * copy a crashed fallback flip may have left, retrying through the
-    * exists/open race of a concurrent non-atomic flip. None when neither
-    * file exists after the retry budget (callers treat that as "no
-    * pointer layout here" — e.g. fall back to a legacy layout). */
+    * copy a crashed fallback flip may have left, then the primary again,
+    * retrying through the exists/open race of a concurrent non-atomic
+    * flip. None only when no probe finds a pointer (callers treat that as
+    * "no pointer layout here" — e.g. fall back to a legacy layout). */
   def read(fs: FileSystem, dir: String, name: String): Option[String] = {
     val pfs = pointerIoFs(fs)
     val primary = new Path(s"$dir/$name")
@@ -57,6 +62,11 @@ object AtomicPointer {
       try {
         if (pfs.exists(primary)) return Some(readSmall(pfs, primary))
         else if (pfs.exists(aside)) return Some(readSmall(pfs, aside))
+        // a fallback flip that ran to completion between the two probes
+        // (primary moved aside, new primary in, aside deleted) leaves
+        // both probes missing although a pointer existed throughout —
+        // the new primary is there now
+        else if (pfs.exists(primary)) return Some(readSmall(pfs, primary))
         else return None
       } catch {
         // lost the exists/open race with a non-atomic flip — retry
@@ -81,7 +91,8 @@ object AtomicPointer {
     // flip hammer: final pointer read back as ""). With unique tmps a
     // breach degrades to clean last-writer-wins + the fence telling the
     // losers; the pointer content is always some writer's whole value.
-    val tmp = new Path(s"$dir/.$name.tmp.${java.util.UUID.randomUUID()}")
+    val tmp =
+      new Path(s"$dir/${tmpPrefix(name)}.${java.util.UUID.randomUUID()}")
     val primary = new Path(s"$dir/$name")
     writeSmall(pfs, tmp, content)
     try flipFrom(fs, pfs, conf, dir, name, tmp, primary)

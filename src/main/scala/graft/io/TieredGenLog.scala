@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -43,19 +43,23 @@ object TieredGenLog {
   * [[fold]] is tiered: a MINOR fire reads only the unfolded batch shards
   * and APPENDS a sibling generation — the base is never read or written,
   * so per-fire cost is O(batches since the last fire); a MAJOR fire
-  * (forced when `baseRatio <= 0`, the list hits `maxGens`, or the
-  * accumulated non-base bytes reach `baseRatio` of the base) collapses
-  * every live generation plus the batches into ONE — lifetime maintenance
-  * write volume stays ~(1+1/ratio)× corpus instead of quadratic.
+  * (the tier rule [[GenerationPointer.majorFold]]: forced when
+  * `baseRatio <= 0`, the list hits `maxGens`, or the accumulated non-base
+  * bytes reach `baseRatio` of the base) collapses every live generation
+  * plus the batches into ONE — lifetime maintenance write volume stays
+  * ~(1+1/ratio)× corpus instead of quadratic.
   *
-  * Commit protocol (every step spec-pinned on the dedup family, which
-  * this class was extracted from verbatim):
+  * The pointer codec, fenced flip, post-flip self-check and the sweep of
+  * superseded generations are the [[GenerationPointer]] protocol the IVF
+  * index commits through too; this class adds the batch shards, the
+  * `_FOLDED_UPTO` markers and the component views. Commit protocol
+  * (every step spec-pinned on the dedup and lexical families):
   *  1. the new generation's `_FOLDED_UPTO` marker — its FULL source
   *     batch-id set plus, for a major fold, the consumed generation
   *     names — is written FIRST (r12 ADVICE), so a crash anywhere
   *     mid-fold leaves a discriminable 'crashed' orphan;
   *  2. the component parquet writes;
-  *  3. a FENCED pointer flip ([[AtomicPointer.flipFenced]]) — a
+  *  3. a FENCED pointer flip ([[GenerationPointer.flip]]) — a
   *     concurrent maintainer's interleaved flip fails this fold loudly;
   *  4. cleanup of superseded generations + folded batch dirs — inline
   *     when the caller is the index's only reader (`retainSuperseded =
@@ -112,24 +116,15 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
   private def fs(spark: SparkSession): FileSystem =
     new Path(idxDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def validGenName(n: String): Boolean =
-    n.startsWith("base-") && !n.contains("/") && !n.contains("..")
+  /** "maxBatch gen1,gen2,…" over `base-<uuid>` generations; a
+    * pre-tiering pointer holds one name and parses as a one-element
+    * list. */
+  private val Folded = GenerationPointer("FOLDED", "base-", watermarked = true)
 
   def readState(spark: SparkSession): Option[FoldState] =
-    AtomicPointer.read(fs(spark), idxDir, "FOLDED").map { c =>
-      val parts = c.split("\\s+")
-      // the numeric field parses via Try so a digit string beyond Long
-      // range still dies with the descriptive message, not a bare
-      // NumberFormatException
-      val maxB = if (parts.length == 2)
-        scala.util.Try(parts(0).toLong).toOption else None
-      // pre-tiering pointers hold one name; tiered pointers a
-      // comma-separated ordered list — both parse here
-      val gens = if (parts.length == 2)
-        parts(1).split(",").toSeq.filter(_.nonEmpty) else Seq.empty
-      require(maxB.isDefined && gens.nonEmpty && gens.forall(validGenName),
-        s"corrupt FOLDED pointer at $idxDir: '$c'")
-      FoldState(maxB.get, gens)
+    Folded.read(fs(spark), idxDir).map { c =>
+      val (maxBatch, gens) = Folded.decode(idxDir, c)
+      FoldState(maxBatch.get, gens)
     }
 
   /** Anchored `batch=N` dir-name parse: stray near-protocol names (an
@@ -141,18 +136,13 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
     BatchDirName.findFirstMatchIn(name)
       .flatMap(m => scala.util.Try(m.group(1).toLong).toOption)
 
-  private def list(hfs: FileSystem, p: String): Seq[FileStatus] =
-    (try Option(hfs.listStatus(new Path(p)))
-      .getOrElse(Array.empty[FileStatus]).toSeq
-    catch { case _: java.io.FileNotFoundException => Seq.empty[FileStatus] })
-
   /** Unfolded `batch=N` shard ids (all components move in lockstep; the
     * first is listed). Ids at or below the fold boundary are replay
     * leftovers the effective view ignores. */
   def unfoldedBatches(spark: SparkSession,
                       state: Option[FoldState]): Seq[Long] = {
     val floor = state.map(_.maxBatch).getOrElse(Long.MinValue)
-    list(fs(spark), s"$idxDir/${components.head}")
+    GenerationPointer.list(fs(spark), s"$idxDir/${components.head}")
       .filter(_.isDirectory).map(_.getPath.getName)
       .flatMap(parseBatchDir)
       .filter(_ > floor)
@@ -224,15 +214,6 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
     }
   }
 
-  /** Recursive byte size of one path (0 when absent) — the tier
-    * decision's input. One getContentSummary RPC per live dir; the live
-    * set is bounded by `maxGens` + the unfolded budget. */
-  private def pathBytes(hfs: FileSystem, p: String): Long = {
-    val hp = new Path(p)
-    try { if (hfs.exists(hp)) hfs.getContentSummary(hp).getLength else 0L }
-    catch { case _: java.io.FileNotFoundException => 0L }
-  }
-
   /** The EFFECTIVE component views (aligned with the constructor's
     * component order): live generations plus strictly-newer batch shards
     * — never a replayed dir at or below the fold boundary. None when
@@ -242,7 +223,7 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
     val hfs = fs(spark)
     readState(spark) match {
       case None =>
-        val bases = list(hfs, idxDir)
+        val bases = GenerationPointer.list(hfs, idxDir)
           .filter(st => st.isDirectory &&
             st.getPath.getName.startsWith("base-"))
           .map(_.getPath.getName)
@@ -254,13 +235,13 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
           // EVERY listed source (dir or generation) still on disk
           val srcs: Option[(Seq[Long], Seq[String])] =
             try {
-              val toks = AtomicPointer.readSmall(hfs,
-                  new Path(s"$idxDir/$b/_FOLDED_UPTO"))
+              val toks = GenerationPointer.readFile(hfs,
+                  s"$idxDir/$b/_FOLDED_UPTO")
                 .split(",").map(_.trim).filter(_.nonEmpty)
               val (genToks, idToks) = toks.partition(_.startsWith("base-"))
               val ids = idToks.flatMap(t => scala.util.Try(t.toLong).toOption)
               if (toks.nonEmpty && ids.length == idToks.length &&
-                  genToks.forall(validGenName))
+                  genToks.forall(Folded.isGen))
                 Some((ids.toSeq, genToks.toSeq))
               else None
             } catch { case _: java.io.IOException => None }
@@ -347,7 +328,7 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
     // deleted by cleanup — the exact scenario this guard targets.
     val floor = state.map(_.maxBatch).getOrElse(Long.MinValue)
     val allCompIds = components.flatMap(c =>
-        list(hfs, s"$idxDir/$c")
+        GenerationPointer.list(hfs, s"$idxDir/$c")
           .filter(_.isDirectory).map(_.getPath.getName)
           .flatMap(parseBatchDir))
       .filter(_ > floor).toSet
@@ -359,16 +340,12 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
         "would consume nothing from them and cleanup would delete them; " +
         "replay them first (single-writer contract)")
     val gens = state.map(_.gens).getOrElse(Seq.empty)
-    // tier decision, by BYTES (corpus mass, not dir counts): minor while
-    // everything-but-the-base is still small relative to the base
-    val major = gens.isEmpty || baseRatio <= 0.0 ||
-      gens.size >= maxGens || {
-        val baseBytes = pathBytes(hfs, s"$idxDir/${gens.head}")
-        val tailBytes = gens.tail.map(g => pathBytes(hfs, s"$idxDir/$g")).sum +
-          srcIds.map(b => components.map(c =>
-            pathBytes(hfs, s"$idxDir/$c/batch=$b")).sum).sum
-        tailBytes >= baseRatio * baseBytes
-      }
+    // the pending data is the consumed batch shards, which no generation
+    // holds yet — so only the folded generations count against maxGens
+    val major = GenerationPointer.majorFold(gens, gens.size, maxGens,
+      baseRatio, g => GenerationPointer.pathBytes(hfs, s"$idxDir/$g"),
+      srcIds.map(b => components.map(c =>
+        GenerationPointer.pathBytes(hfs, s"$idxDir/$c/batch=$b")).sum).sum)
     val cur: Seq[DataFrame] =
       if (major) effective(spark).getOrElse(
         throw new IllegalStateException(
@@ -396,8 +373,8 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
     // presence would misread lost-after-replay as crashed.
     val srcTokens = srcIds.sorted.map(_.toString) ++
       (if (major) gens else Seq.empty)
-    AtomicPointer.writeSmall(hfs,
-      new Path(s"$idxDir/$name/_FOLDED_UPTO"), srcTokens.mkString(","))
+    GenerationPointer.writeFile(hfs, s"$idxDir/$name/_FOLDED_UPTO",
+      srcTokens.mkString(","))
     components.zip(cur).foreach { case (c, df) =>
       // a fold is the one write that pays for read-side layout: the
       // caller's per-component layout hook (e.g. range-cluster postings
@@ -407,12 +384,11 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
       foldWriteLayout.getOrElse(c, identity[DataFrame] _)(df)
         .write.parquet(s"$idxDir/$name/$c")
     }
-    val pointerContent = s"$upToBatch ${newGens.mkString(",")}"
+    val pointerContent = Folded.encode(Some(upToBatch), newGens)
     // FENCED flip (r11 verdict 3): the fold fails loudly if a concurrent
     // maintainer's flip interleaved — a silently lost fold generation
     // would serve the next batches a stale boundary
-    AtomicPointer.flipFenced(hfs,
-      spark.sparkContext.hadoopConfiguration, idxDir, "FOLDED",
+    Folded.flip(hfs, spark.sparkContext.hadoopConfiguration, idxDir,
       pointerContent)
     if (!retainSuperseded) cleanup(hfs, newGens.toSet, upToBatch)
     else {
@@ -422,20 +398,19 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
       srcIds.foreach(b => supersededAt(s"batch=$b") = now)
     }
 
-    // end-of-maintenance self-check: the pointer must still name OUR
-    // generation list and every live generation must still exist — a
-    // concurrent folder's cleanup deleting them as "superseded" is
-    // caught here instead of surfacing as a mystery read failure three
-    // batches later (detection, not locking; the serial-foreachBatch
-    // deployment makes this a no-op in practice)
-    AtomicPointer.verifyOwn(hfs, idxDir, "FOLDED", pointerContent)
-    for (g <- newGens; c <- components) {
-      if (!hfs.exists(new Path(s"$idxDir/$g/$c")))
-        throw new IllegalStateException(
-          s"fold: live generation $idxDir/$g lost its $c component " +
-            "after the flip — a concurrent maintainer's cleanup destroyed " +
-            "it (single-writer contract breached); rebuild the index")
-    }
+    // end-of-maintenance self-check: a concurrent folder's cleanup
+    // deleting our generations as "superseded" is caught here instead of
+    // surfacing as a mystery read failure three batches later (the
+    // serial-foreachBatch deployment makes this a no-op in practice)
+    Folded.verifyLive(hfs, idxDir, pointerContent, g =>
+      components.foreach { c =>
+        if (!hfs.exists(new Path(s"$idxDir/$g/$c")))
+          throw new IllegalStateException(
+            s"fold: live generation $idxDir/$g lost its $c component " +
+              "after the flip — a concurrent maintainer's cleanup " +
+              "destroyed it (single-writer contract breached); rebuild " +
+              "the index")
+      })
   }
 
   /** Delete everything the live pointer supersedes: non-live `base-*`
@@ -470,7 +445,7 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
                       upToBatch: Long, minAgeMs: Long = 0L): Unit = {
     val now = System.currentTimeMillis()
     // items with no in-process clock were superseded by a flip at or
-    // before the CURRENT pointer's (they only arise after a writer
+    // before the live pointer's (they only arise after a writer
     // restart — steady-state folds record every item) — their drain
     // clock is the pointer file's mtime. Readers in OTHER processes
     // survive a writer restart that way: the old code deleted unknowns
@@ -480,7 +455,7 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
     // error is the one wrong default for a drain guard.
     lazy val ptrAgeOk: Boolean = {
       val pfs = AtomicPointer.pointerIoFs(hfs)
-      val primary = new Path(s"$idxDir/FOLDED")
+      val primary = new Path(s"$idxDir/${Folded.name}")
       try pfs.exists(primary) &&
         now - pfs.getFileStatus(primary).getModificationTime >= minAgeMs
       catch { case _: java.io.IOException => false }
@@ -488,19 +463,9 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
     def oldEnough(key: String): Boolean = minAgeMs <= 0L ||
       supersededAt.get(key).map(t => now - t >= minAgeMs)
         .getOrElse(ptrAgeOk)
-    list(hfs, idxDir).foreach { st =>
-      val n = st.getPath.getName
-      if ((st.isDirectory && n.startsWith("base-") && !live.contains(n) &&
-            oldEnough(n)) ||
-          // crash-orphaned per-flip pointer tmps (uuid-suffixed; never
-          // readable, no drain clock)
-          (!st.isDirectory && n.startsWith(".FOLDED.tmp"))) {
-        hfs.delete(st.getPath, true)
-        supersededAt.remove(n); ()
-      }
-    }
+    Folded.sweep(hfs, idxDir, live, oldEnough).foreach(supersededAt.remove)
     components.foreach { c =>
-      list(hfs, s"$idxDir/$c").foreach { st =>
+      GenerationPointer.list(hfs, s"$idxDir/$c").foreach { st =>
         val key = st.getPath.getName
         if (st.isDirectory &&
             parseBatchDir(key).exists(_ <= upToBatch) && oldEnough(key)) {
@@ -509,7 +474,5 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
         }
       }
     }
-    AtomicPointer.clearAside(hfs, idxDir, "FOLDED")
-    ()
   }
 }

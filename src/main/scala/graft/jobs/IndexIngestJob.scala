@@ -97,9 +97,7 @@ object IndexIngestJob {
         // index that has not been built yet must idle harmlessly (a
         // resolve here would throw and kill the stream on its very
         // first — possibly empty — trigger)
-        val hfs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        if (graft.io.AtomicPointer.read(hfs, dir, "CURRENT").isDefined) {
+        if (Ann.ivfPointerExists(spark, dir)) {
           Ann.sweepIvfIndex(spark, dir)
           ()
         }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
   IntegerType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorFunctions._
+import graft.io.GenerationPointer
+import org.apache.hadoop.fs.{FileSystem, Path}
 import scala.util.Random
 
 /** Approximate-nearest-neighbor search over a dense embedding column
@@ -523,7 +525,8 @@ object Ann {
     * components, `_BUILD_ID` markers, `manifest.json` (seed, nCentroids,
     * buildId, committed shards) LAST — in a directory no reader resolves
     * yet, then commits by atomically repointing CURRENT
-    * ([[flipCurrent]]). There is NO reader-visible window: a resolution
+    * ([[graft.io.GenerationPointer]], the protocol the generation-log
+    * index families share). There is NO reader-visible window: a resolution
     * before the flip serves the old generation complete, one after it the
     * new — the pre-r11 in-place swap exposed a no-manifest window of a
     * few metadata ops that a 1000-executor query fleet WILL hit daily.
@@ -552,129 +555,132 @@ object Ann {
       .getOrElse(throw new IllegalArgumentException(
         "buildIvfIndex: input is empty — nothing to index"))
     val spark = data.sparkSession
-    val buildId = java.util.UUID.randomUUID().toString
-    val gen = s"gen-$buildId"
-    val genDir = s"$dir/$gen"
-    cents.write.mode("overwrite").parquet(s"$genDir/centroids.parquet")
-    // assignment reads the centroids BACK from the written file, so the
-    // persisted index is self-consistent even if training were re-run
-    val centsBack = spark.read.parquet(s"$genDir/centroids.parquet")
-    val nCents = centsBack.count()
-    // postings carry their source shard as a second partition level:
-    // the base build is shard 0, incremental appends add shard 1..N
-    // ([[appendIvfShard]]) without touching shard-0 files. The assignment
-    // window's shuffle is ∝ vectors × centroids — sized from input stats
-    // (r11: the posting build was the last heavy entry point running at
-    // the fixed session setting).
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val nCents = cents.count()
     val nCentsInt = math.max(1, math.min(nCents, Int.MaxValue.toLong).toInt)
-    clusterForPartitionedWrite(
-        assignCells(data, idCol, vecCol, centsBack, nCells = 1,
-            statsMult = nCentsInt)
-          .where(col("rn") === 1)
-          .select(col("id"), col("v"), col("cell"), lit(0).as("shard")),
-        nCentsInt)
-      .write.mode("overwrite").partitionBy("cell", "shard")
-      .parquet(s"$genDir/postings.parquet")
-    val hpath = new org.apache.hadoop.fs.Path(dir)
-    val fs = hpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    writeSmallFile(fs, s"$genDir/centroids.parquet/_BUILD_ID", buildId)
-    writeSmallFile(fs, s"$genDir/postings.parquet/_BUILD_ID", buildId)
-    // manifest LAST inside the still-private generation dir, via tmp +
-    // rename: a crash can leave an orphan generation with no manifest —
-    // unreachable behind the pointer — but never a half-written one
-    writeSmallFile(fs, s"$genDir/.manifest.json.tmp",
-      s"""{"seed":$seed,"nCentroids":$nCents,"requested":$nCentroids,""" +
-        s""""buildId":"$buildId","shards":[0]}""")
-    require(fs.rename(
-      new org.apache.hadoop.fs.Path(s"$genDir/.manifest.json.tmp"),
-      new org.apache.hadoop.fs.Path(s"$genDir/manifest.json")),
-      s"buildIvfIndex: manifest rename inside $genDir failed — generation " +
-        "is uncommitted and the live pointer untouched; rerun buildIvfIndex")
-    // THE commit: atomically repoint CURRENT at the finished generation
-    flipCurrent(fs, spark.sparkContext.hadoopConfiguration, dir, gen)
+    val built = writeIvfGeneration(fs, dir, cents, seed, nCents,
+        nCentroids) { centsPath =>
+      // assignment reads the centroids BACK from the written file, so the
+      // persisted index is self-consistent even if training were re-run.
+      // The base build is shard 0; incremental appends add shard 1..N
+      // ([[appendIvfShard]]) without touching shard-0 files. The
+      // assignment window's shuffle is ∝ vectors × centroids — sized from
+      // input stats (r11: the posting build was the last heavy entry
+      // point running at the fixed session setting).
+      Some(assignCells(data, idCol, vecCol, spark.read.parquet(centsPath),
+          nCells = 1, statsMult = nCentsInt)
+        .where(col("rn") === 1))
+    }
     // superseded generation / legacy components / stale scratch deleted
     // AFTER the flip — entirely off the reader-visible path. With
     // retainSuperseded the old generation stays for in-flight readers;
     // [[sweepIvfIndex]] finishes the cycle once they drain.
-    if (!retainSuperseded) cleanupAfterFlip(fs, dir, gen)
-    finalizeMaintenance(fs, dir, gen, Seq((gen, buildId, false)))
+    commitIvfGens(spark, fs, dir, keep = Nil, Seq(built),
+      emptyTail = false, retainSuperseded)
   }
 
-  /** End-of-maintenance self-check (detection, not locking — r11
-    * verdict 3): after the flip AND the cleanup, the pointer must still
-    * name OUR generation and that generation must still be complete
-    * (manifest + both markers). The flip's own fence catches a pointer
-    * clobbered before our read-back; this catches the other half a
-    * concurrent maintainer can inflict — its post-flip cleanup deleting
-    * our generation dir as "superseded" while our pointer verify had
-    * already passed (caught live by Round12Spec's concurrent-compaction
-    * race: both threads claimed success, final pointer named a
-    * manifest-less husk). Three tiny file reads; a maintenance op may now
-    * fail loudly AFTER its flip — the failure means a concurrent
-    * maintainer superseded or destroyed the result, and the caller must
-    * not report its generation as installed. */
-  private def finalizeMaintenance(fs: org.apache.hadoop.fs.FileSystem,
-                                  dir: String, pointerContent: String,
-                                  checks: Seq[(String, String, Boolean)],
-                                  retainedGens: Seq[String] = Nil): Unit = {
-    graft.io.AtomicPointer.verifyOwn(fs, dir, "CURRENT", pointerContent)
-    checks.foreach { case (gen, buildId, allowEmptyPostings) =>
-      val m = readIvfManifest(fs, s"$dir/$gen")
-      if (m.buildId != buildId)
-        throw new IllegalStateException(
-          s"IVF maintenance at $dir: generation $gen now carries buildId " +
-            s"${m.buildId}, not this maintainer's $buildId — a concurrent " +
-            "maintainer rewrote it (single-writer contract breached)")
-      requireMarkersMatch(fs, s"$dir/$gen", buildId)
-      // markers/manifest alone are not proof of life: a concurrent
-      // maintainer's cleanup can delete this generation's DATA mid-write,
-      // after which our own marker/manifest writes recreate the dir as a
-      // husk (fs.create makes parents) that passes the checks above —
-      // caught by the concurrent-compaction race spec (both threads
-      // "succeeded", the pointer named a generation whose components held
-      // only underscore files). Require at least one data entry per
-      // component; a husk fails here, loudly. A tiered layout's fresh
-      // tail is EMPTY by construction — its postings check is skipped,
-      // its centroids check is not.
-      Seq("centroids.parquet", "postings.parquet").foreach { comp =>
-        if (!(comp == "postings.parquet" && allowEmptyPostings)) {
-          val st =
-            try fs.listStatus(
-              new org.apache.hadoop.fs.Path(s"$dir/$gen/$comp"))
-            catch { case _: java.io.FileNotFoundException => null }
-          val hasData = st != null && st.exists { s =>
-            val n = s.getPath.getName
-            !n.startsWith("_") && !n.startsWith(".")
-          }
-          if (!hasData) throw new IllegalStateException(
+  /** The IVF index's pointer: `CURRENT`, naming `gen-<buildId>` dirs. */
+  private val Current =
+    GenerationPointer("CURRENT", "gen-", watermarked = false)
+
+  /** Write one complete IVF generation `dir/gen-<buildId>` — for a
+    * build, a compaction's merged generation and a tiered fresh tail.
+    * Order: `cents`; the (id, v, cell) rows `postings` renders from the
+    * written centroids' path (None: an EMPTY tail) as shard 0; a
+    * `_BUILD_ID` marker per component; `manifest.json` LAST via tmp +
+    * rename — a crash leaves a manifest-less orphan no pointer names,
+    * never a half-written one. `srcs`: fold provenance ([[IvfManifest]]).
+    * Returns (generation, buildId). */
+  private def writeIvfGeneration(fs: FileSystem, dir: String,
+                                 cents: DataFrame, seed: Long,
+                                 nCentroids: Long, requested: Long,
+                                 srcs: Seq[(String, Seq[Int])] = Nil)(
+      postings: String => Option[DataFrame]): (String, String) = {
+    val buildId = java.util.UUID.randomUUID().toString
+    val gen = s"gen-$buildId"
+    val genDir = s"$dir/$gen"
+    cents.write.mode("overwrite").parquet(s"$genDir/centroids.parquet")
+    postings(s"$genDir/centroids.parquet").foreach { p =>
+      clusterForPartitionedWrite(
+          p.select(col("id"), col("v"), col("cell"), lit(0).as("shard")),
+          math.max(1, math.min(nCentroids, Int.MaxValue.toLong).toInt))
+        .write.mode("overwrite").partitionBy("cell", "shard")
+        .parquet(s"$genDir/postings.parquet")
+    }
+    IvfComponents.foreach(c =>
+      GenerationPointer.writeFile(fs, s"$genDir/$c/_BUILD_ID", buildId))
+    val srcsField = srcs.map { case (b, shards) =>
+      s"$b:${shards.sorted.mkString("|")}" }.mkString(",")
+    val prov = if (srcs.isEmpty) "" else s""","srcs":"$srcsField""""
+    GenerationPointer.writeFile(fs, s"$genDir/.manifest.json.tmp",
+      s"""{"seed":$seed,"nCentroids":$nCentroids,"requested":$requested,""" +
+        s""""buildId":"$buildId","shards":[0]$prov}""")
+    require(fs.rename(new Path(s"$genDir/.manifest.json.tmp"),
+        new Path(s"$genDir/manifest.json")),
+      s"IVF maintenance at $dir: manifest rename inside $gen failed — the " +
+        "generation is uncommitted and the live pointer untouched; rerun")
+    (gen, buildId)
+  }
+
+  private val IvfComponents = Seq("centroids.parquet", "postings.parquet")
+
+  /** Commit a maintenance op: flip CURRENT (fenced) to the retained
+    * `keep` generations followed by the (generation, buildId) pairs it
+    * `built` — the last an empty tail when `emptyTail` — clean up unless
+    * `retainSuperseded`, then self-check. A generation of ours must still
+    * carry our buildId and markers, and DATA in every component but an
+    * empty tail's postings: a concurrent maintainer's cleanup can delete
+    * its data mid-write, after which our own marker writes recreate the
+    * dir as a husk (caught by the concurrent-compaction race spec). A
+    * retained generation must still have its manifest. */
+  private def commitIvfGens(spark: SparkSession, fs: FileSystem, dir: String,
+                            keep: Seq[String], built: Seq[(String, String)],
+                            emptyTail: Boolean,
+                            retainSuperseded: Boolean): Unit = {
+    val live = keep ++ built.map(_._1)
+    val content = Current.encode(None, live)
+    Current.flip(fs, spark.sparkContext.hadoopConfiguration, dir, content)
+    if (!retainSuperseded) cleanupAfterFlip(fs, dir, live.toSet)
+    val ours = built.toMap
+    Current.verifyLive(fs, dir, content, gen => ours.get(gen) match {
+      case Some(buildId) =>
+        val m = readIvfManifest(fs, s"$dir/$gen")
+        if (m.buildId != buildId)
+          throw new IllegalStateException(
+            s"IVF maintenance at $dir: generation $gen now carries buildId " +
+              s"${m.buildId}, not this maintainer's $buildId — a concurrent " +
+              "maintainer rewrote it (single-writer contract breached)")
+        requireMarkersMatch(fs, s"$dir/$gen", buildId)
+        IvfComponents.foreach { comp =>
+          val emptyOk = emptyTail && gen == built.last._1 &&
+            comp == "postings.parquet"
+          def hasData = GenerationPointer.list(fs, s"$dir/$gen/$comp")
+            .exists { st =>
+              val n = st.getPath.getName
+              !n.startsWith("_") && !n.startsWith(".")
+            }
+          if (!emptyOk && !hasData) throw new IllegalStateException(
             s"IVF maintenance at $dir: generation $gen's $comp holds no " +
               "data files — a concurrent maintainer's cleanup destroyed " +
               "this generation mid-commit (single-writer contract " +
               "breached); this maintainer's result is NOT installed, " +
               "rerun maintenance serially")
         }
-      }
-    }
-    // generations this maintenance RETAINED (a minor fold's base + frozen
-    // siblings) must still be on disk — a concurrent maintainer's cleanup
-    // deleting one as "superseded" would silently lose its rows
-    retainedGens.foreach { g =>
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$g/manifest.json")))
-        throw new IllegalStateException(
-          s"IVF maintenance at $dir: retained generation $g lost its " +
-            "manifest after the flip — a concurrent maintainer's cleanup " +
-            "destroyed it (single-writer contract breached); rebuild")
-    }
+      case None =>
+        if (!fs.exists(new Path(s"$dir/$gen/manifest.json")))
+          throw new IllegalStateException(
+            s"IVF maintenance at $dir: retained generation $gen lost its " +
+              "manifest after the flip — a concurrent maintainer's cleanup " +
+              "destroyed it (single-writer contract breached); rebuild")
+    })
   }
 
   /** Resolve an index ROOT to its live generation directory: the one
     * named by `dir/CURRENT` (pointer layout), or the root itself when a
     * pre-pointer index keeps its `manifest.json` in place (legacy
     * layout — still readable; its next rebuild/compact migrates it).
-    * On filesystems whose overwrite-rename is delete-then-rename rather
-    * than atomic (the local FS; HDFS rename2 IS atomic), a read can race
-    * the two metadata ops of a flip — absorbed by a bounded retry; a
-    * persistent miss fails loudly.
+    * A non-atomic flip racing the read is absorbed by the pointer read
+    * itself; a dir with neither layout fails loudly, and fast.
     *
     * TIERED indexes (r12 verdict 1) carry a comma-separated generation
     * LIST in CURRENT — base first, append-target TAIL last. This
@@ -683,68 +689,43 @@ object Ann {
     * generation. A single-generation pointer (every pre-tiering index)
     * behaves exactly as before. */
   def resolveIvfDir(spark: SparkSession, dir: String): String =
-    resolveIvfDir(new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
+    resolveIvfDirs(spark, dir).last
 
   /** All live generation directories, ordered base → tail. One element
     * for every pre-tiering index. */
   def resolveIvfDirs(spark: SparkSession, dir: String): Seq[String] =
-    resolveIvfGens(new org.apache.hadoop.fs.Path(dir)
+    resolveIvfGens(new Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
 
-  private def resolveIvfDir(fs: org.apache.hadoop.fs.FileSystem,
-                            dir: String): String =
-    resolveIvfGens(fs, dir).last
+  /** Whether `dir` has a CURRENT pointer — false before the first build
+    * and on a legacy in-place index. */
+  private[graft] def ivfPointerExists(spark: SparkSession,
+                                      dir: String): Boolean =
+    Current.read(new Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), dir).isDefined
 
-  private def validIvfGenName(n: String): Boolean =
-    n.startsWith("gen-") && !n.contains("/") && !n.contains("..")
-
-  private def resolveIvfGens(fs: org.apache.hadoop.fs.FileSystem,
-                             dir: String): Seq[String] = {
-    var attempt = 0
-    while (attempt < 20) {
-      // read() covers primary + crashed-fallback aside with its own
-      // FNF-race retry; the loop here covers the window where a flip
-      // completed between the two existence probes (pointer momentarily
-      // unseen) on a filesystem without atomic replace
-      graft.io.AtomicPointer.read(fs, dir, "CURRENT") match {
-        case Some(content) =>
-          val gens = content.split(",").toSeq.filter(_.nonEmpty)
-          require(gens.nonEmpty && gens.forall(validIvfGenName),
-            s"corrupt CURRENT pointer at $dir: '$content'")
-          return gens.map(g => s"$dir/$g")
-        case None =>
-          if (fs.exists(
-              new org.apache.hadoop.fs.Path(s"$dir/manifest.json")))
-            return Seq(dir) // legacy in-place layout
-      }
-      // the retry budget exists for ONE state: a non-atomic flip's
-      // mid-rename window, in which index artifacts (a gen-* dir, an
-      // aside pointer, flip scratch) necessarily exist. A dir that does
-      // not exist, or holds none of them, is an unbuilt/mistyped path no
-      // flip can produce — fail now instead of spinning the full ~100 ms
-      // budget on every deploy-before-build probe (r11 advice). Probed
-      // every iteration, so a first build landing mid-probe falls through
-      // to the normal retry instead of a spurious throw.
-      val entries =
-        try Option(fs.listStatus(new org.apache.hadoop.fs.Path(dir)))
-          .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-          .map(_.getPath.getName)
-        catch { case _: java.io.FileNotFoundException => null }
-      if (entries == null || !entries.exists(n =>
-          n.startsWith("gen-") || n == "CURRENT" || n == ".CURRENT.old" ||
-          n.startsWith(".CURRENT.tmp") || n == "manifest.json"))
+  private def resolveIvfGens(fs: FileSystem, dir: String): Seq[String] =
+    Current.read(fs, dir) match {
+      case Some(content) =>
+        Current.decode(dir, content)._2.map(g => s"$dir/$g")
+      case None if fs.exists(new Path(s"$dir/manifest.json")) =>
+        Seq(dir) // legacy in-place layout
+      case None =>
+        // an unbuilt or mistyped path (r11 advice: fail now, never spin)
+        // — told apart from a dir that holds index artifacts but no
+        // readable pointer (torn, or a pointer deleted by hand)
+        val exists = fs.exists(new Path(dir))
+        if (!exists || !GenerationPointer.list(fs, dir).exists { st =>
+            val n = st.getPath.getName
+            n.startsWith("gen-") || Current.ownsFile(n) })
+          throw new IllegalStateException(
+            s"IVF index at $dir ${if (!exists) "does not exist"
+              else "contains no index artifacts"} — unbuilt or mistyped " +
+              "path; run buildIvfIndex first")
         throw new IllegalStateException(
-          s"IVF index at $dir ${if (entries == null) "does not exist"
-            else "contains no index artifacts"} — unbuilt or mistyped " +
-            "path; run buildIvfIndex first")
-      attempt += 1
-      if (attempt < 20) Thread.sleep(5)
+          s"IVF index at $dir has neither a CURRENT pointer nor a legacy " +
+            "manifest.json — torn, empty, or pre-manifest; rerun buildIvfIndex")
     }
-    throw new IllegalStateException(
-      s"IVF index at $dir has neither a CURRENT pointer nor a legacy " +
-        "manifest.json — torn, empty, or pre-manifest; rerun buildIvfIndex")
-  }
 
   /** The live buildId(s), after the same manifest + marker consistency
     * checks every query runs — the cheap ops probe for "what is serving
@@ -753,8 +734,7 @@ object Ann {
     * maintenance op changes the string, so swap detection keeps
     * working). */
   def liveIvfGeneration(spark: SparkSession, dir: String): String = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     resolveAndReadManifests(fs, dir).map(_._2.buildId).mkString(",")
   }
 
@@ -764,8 +744,7 @@ object Ann {
     * listStatus per generation, no Spark job; read cost grows with this
     * number ([[compactIvfIndex]] resets it to 1). */
   def committedIvfShardCount(spark: SparkSession, dir: String): Int = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     resolveAndReadManifests(fs, dir)
       .map { case (g, m) => committedShards(fs, g, m).size }.sum
   }
@@ -781,7 +760,7 @@ object Ann {
     * metadata phase of a query genuinely zero-blip for readers, not just
     * for the writer's commit. */
   private def resolveAndReadManifests(
-      fs: org.apache.hadoop.fs.FileSystem,
+      fs: FileSystem,
       dir: String): Seq[(String, IvfManifest)] = {
     var attempt = 0
     while (true) {
@@ -804,57 +783,28 @@ object Ann {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Atomically repoint `dir/CURRENT` at generation `gen` — the
-    * [[graft.io.AtomicPointer]] commit primitive (atomic replace where
-    * the FS offers one; a recoverable aside-rename sequence elsewhere,
-    * with [[resolveIvfDir]] reading through the aside copy). FENCED
-    * (r11 verdict 3): the flip re-reads the pointer and fails loudly if a
-    * concurrent maintainer's flip interleaved — the losing build/compact
-    * reports the breach instead of silently believing its generation is
-    * live while the winner's cleanup deletes it. */
-  private def flipCurrent(fs: org.apache.hadoop.fs.FileSystem,
-                          conf: org.apache.hadoop.conf.Configuration,
-                          dir: String, gen: String): Unit =
-    graft.io.AtomicPointer.flipFenced(fs, conf, dir, "CURRENT", gen)
-
-  /** Post-flip cleanup, OFF the commit path: superseded generation dirs,
-    * legacy in-place components now shadowed by the pointer, stale flip
-    * tmps, and pre-pointer scratch dirs. Deleting a 100 TB postings tree
-    * here blocks nothing — new resolutions already land on `keepGen`.
-    * Run maintenance single-writer (the [[appendIvfShard]] rule): a
+  /** Post-flip cleanup, OFF the commit path: the generation sweep
+    * ([[GenerationPointer.sweep]]: superseded `gen-*` dirs, stale flip
+    * tmps, the stale aside pointer) plus the legacy in-place components
+    * the pointer now shadows. Deleting a 100 TB postings tree here blocks
+    * nothing — new resolutions already land on `keepGens`. Run
+    * maintenance single-writer (the [[appendIvfShard]] rule): a
     * concurrent build's in-flight generation dir would be deleted as an
     * orphan by the winner's cleanup. Returns the deleted names. */
-  private def cleanupAfterFlip(fs: org.apache.hadoop.fs.FileSystem,
-                               dir: String, keepGen: String): Seq[String] =
-    cleanupAfterFlip(fs, dir, Set(keepGen))
-
-  private def cleanupAfterFlip(fs: org.apache.hadoop.fs.FileSystem,
-                               dir: String,
+  private def cleanupAfterFlip(fs: FileSystem, dir: String,
                                keepGens: Set[String]): Seq[String] = {
-    // the aside pointer from a crashed fallback flip is only garbage when
-    // the primary pointer exists — after a crash RECOVERY it may be the
-    // sole pointer readers resolve through, and deleting it would orphan
-    // the index
-    val curExists = graft.io.AtomicPointer.pointerIoFs(fs).exists(
-      new org.apache.hadoop.fs.Path(s"$dir/CURRENT"))
-    // the live generation's fold provenance (compacted generations only):
+    // the live generations' fold provenance (compacted generations only):
     // deleting the fold's SOURCE is fenced against appends that committed
     // into it after the fold snapshot (r11 advice — those rows are in no
-    // live generation; see IvfManifest.srcBuildId)
+    // live generation; see IvfManifest.provenance)
     val provs: Seq[(String, Set[Int])] = keepGens.toSeq.flatMap { kg =>
       try readIvfManifest(fs, s"$dir/$kg").provenance
       catch { case scala.util.control.NonFatal(_) => Seq.empty }
     }
     def fenceLostAppends(postings: String): Unit = provs.foreach {
       case (srcBuildId, srcShards) =>
-        val re = ("^_SHARD_COMMIT_" +
-          java.util.regex.Pattern.quote(srcBuildId) + "_(\\d+)$").r
-        val st =
-          try fs.listStatus(new org.apache.hadoop.fs.Path(postings))
-          catch { case _: java.io.FileNotFoundException => null }
-        val lost = (if (st == null) Seq.empty[Int] else st.toSeq.flatMap(s =>
-          re.findFirstMatchIn(s.getPath.getName).map(_.group(1).toInt)))
-          .filterNot(srcShards)
+        val lost =
+          commitMarkerIds(fs, postings, srcBuildId).filterNot(srcShards)
         if (lost.nonEmpty) throw new IllegalStateException(
           s"cleanupAfterFlip: shard(s) ${lost.sorted.mkString(",")} were " +
             s"committed into the superseded generation at $postings AFTER " +
@@ -864,28 +814,15 @@ object Ann {
             "evidence. Re-append those rows from source (or rebuild), " +
             "then sweep.")
     }
-    Option(fs.listStatus(new org.apache.hadoop.fs.Path(dir)))
-      .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-      .toSeq.flatMap { s =>
-        val n = s.getPath.getName
-        val stale =
-          (n.startsWith("gen-") && !keepGens.contains(n)) ||
-          n == "manifest.json" || n == "centroids.parquet" ||
-          n == "postings.parquet" ||
-          n.startsWith(".staging") || n.startsWith(".trash-") ||
-          // shared-name form (pre-r12) and uuid-suffixed per-flip tmps
-          n.startsWith(".CURRENT.tmp") ||
-          // pre-AtomicPointer flips staged tmps as .CURRENT-<gen>.tmp; a
-          // crashed one from before the upgrade must still be cleaned
-          (n.startsWith(".CURRENT-") && n.endsWith(".tmp")) ||
-          (n.startsWith("..CURRENT-") && n.endsWith(".tmp.crc")) ||
-          (n == ".CURRENT.old" && curExists)
-        if (stale) {
-          if (n.startsWith("gen-")) fenceLostAppends(s"${s.getPath}/postings.parquet")
-          else if (n == "postings.parquet") fenceLostAppends(s.getPath.toString)
-          fs.delete(s.getPath, true); Some(n)
-        } else None
+    val legacy = ("manifest.json" +: IvfComponents).filter { n =>
+      val p = new Path(s"$dir/$n")
+      fs.exists(p) && {
+        if (n == "postings.parquet") fenceLostAppends(p.toString)
+        fs.delete(p, true)
       }
+    }
+    legacy ++ Current.sweep(fs, dir, keepGens, { g =>
+      fenceLostAppends(s"$dir/$g/postings.parquet"); true })
   }
 
   /** Delete everything a maintenance flip superseded under an index root,
@@ -898,15 +835,14 @@ object Ann {
     * Refuses a legacy in-place index (nothing there is superseded — the
     * live components ARE the root). Returns the deleted top-level names. */
   def sweepIvfIndex(spark: SparkSession, dir: String): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val gens = resolveIvfGens(fs, dir)
     require(gens != Seq(dir),
       s"sweepIvfIndex: $dir is a legacy in-place index — nothing is " +
         "superseded; its next rebuild/compact migrates it to the pointer " +
         "layout")
     cleanupAfterFlip(fs, dir,
-      gens.map(g => new org.apache.hadoop.fs.Path(g).getName).toSet)
+      gens.map(g => new Path(g).getName).toSet)
   }
 
   /** Compact an incrementally-grown IVF index IN PLACE: fold every
@@ -938,8 +874,7 @@ object Ann {
     * Returns the number of rows compacted. */
   def compactIvfIndex(spark: SparkSession, dir: String,
                       retainSuperseded: Boolean = false): Long = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // every live generation folds in — on a TIERED index the legacy
     // entry point is simply a full (major) collapse to one generation
     compactGensInto(spark, fs, dir, resolveAndReadManifests(fs, dir),
@@ -977,24 +912,19 @@ object Ann {
                             retainSuperseded: Boolean = false): Long = {
     require(maxGens >= 2, s"compactIvfIndexTiered: maxGens=$maxGens — the" +
       " tiered layout needs room for at least a base and a tail")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val gms = resolveAndReadManifests(fs, dir)
-    def genBytes(g: String): Long =
-      try fs.getContentSummary(new org.apache.hadoop.fs.Path(g)).getLength
-      catch { case _: java.io.FileNotFoundException => 0L }
-    val major = gms.size <= 1 || baseRatio <= 0.0 ||
-      gms.size >= maxGens || {
-        val bs = gms.map(gm => genBytes(gm._1))
-        bs.tail.sum.toDouble >= baseRatio * bs.head
-      }
+    // the append tail holds the pending data and counts against maxGens
+    val major = GenerationPointer.majorFold(gms.init.map(_._1), gms.size,
+      maxGens, baseRatio, GenerationPointer.pathBytes(fs, _),
+      GenerationPointer.pathBytes(fs, gms.last._1))
     if (major)
       compactGensInto(spark, fs, dir, gms, keepPrefix = Seq.empty,
         freshTail = true, retainSuperseded = retainSuperseded)
     else if (!hasPostingData(fs, gms.last._1)) 0L
     else compactGensInto(spark, fs, dir, Seq(gms.last),
       keepPrefix = gms.init.map(gm =>
-        new org.apache.hadoop.fs.Path(gm._1).getName),
+        new Path(gm._1).getName),
       freshTail = true, retainSuperseded = retainSuperseded)
   }
 
@@ -1005,7 +935,7 @@ object Ann {
     * [[compactIvfIndex]] (all gens, no tail) and
     * [[compactIvfIndexTiered]] (minor: tail only, keep the rest). */
   private def compactGensInto(spark: SparkSession,
-                              fs: org.apache.hadoop.fs.FileSystem,
+                              fs: FileSystem,
                               dir: String,
                               srcGms: Seq[(String, IvfManifest)],
                               keepPrefix: Seq[String],
@@ -1023,77 +953,31 @@ object Ann {
         s"compactIvfIndex: no posting data to fold at $dir — torn build " +
           "or an empty index; rerun buildIvfIndex"))
     val cents = spark.read.parquet(s"${srcGms.head._1}/centroids.parquet")
-    val buildId = java.util.UUID.randomUUID().toString
-    val gen = s"gen-$buildId"
-    val genDir = s"$dir/$gen"
-    val nCentsInt = math.max(1,
-      math.min(m0.nCentroids, Int.MaxValue.toLong).toInt)
-    // materializing actions FIRST — both new-generation components exist
-    // in full before cleanup deletes the live dirs they were read from
-    cents.write.mode("overwrite").parquet(s"$genDir/centroids.parquet")
-    clusterForPartitionedWrite(
-        post.select(col("id"), col("v"), col("cell"), lit(0).as("shard")),
-        nCentsInt)
-      .write.mode("overwrite").partitionBy("cell", "shard")
-      .parquet(s"$genDir/postings.parquet")
+    // materializing writes FIRST — the new generation exists in full
+    // before cleanup deletes the live dirs it was read from. Its fold
+    // provenance records, per source generation, exactly which shards it
+    // holds, so post-flip cleanup can DETECT a shard an append committed
+    // into a source after this snapshot (r11 advice — that shard's rows
+    // are in no live generation; deleting its dir silently would turn a
+    // single-writer breach into data loss).
+    val merged = writeIvfGeneration(fs, dir, cents, m0.seed, m0.nCentroids,
+        m0.requested, srcs = srcCommitted.map { case (_, m, committed) =>
+          (m.buildId, committed) })(_ => Some(post))
     // a zero-column parquet count: row counts come from footers/row-group
     // metadata, no vector data is decompressed — the cheap way to both
     // return the size and ASSERT the new tree is fully readable before
     // the flip supersedes the only other copy
-    val rows = spark.read.parquet(s"$genDir/postings.parquet").count()
-    writeSmallFile(fs, s"$genDir/centroids.parquet/_BUILD_ID", buildId)
-    writeSmallFile(fs, s"$genDir/postings.parquet/_BUILD_ID", buildId)
-    // fold provenance for EVERY source generation: exactly which shards
-    // this generation holds, so post-flip cleanup can DETECT a shard an
-    // append committed into a source generation after this snapshot (r11
-    // advice — that shard's rows are in no live generation; deleting its
-    // dir silently would turn a single-writer breach into data loss).
-    // Legacy single-source fields kept alongside for single-source folds.
-    val srcsField = srcCommitted.map { case (_, m, committed) =>
-      s"${m.buildId}:${committed.sorted.mkString("|")}" }.mkString(",")
-    val legacyProv = if (srcCommitted.size == 1)
-      s""""srcBuildId":"${m0.buildId}",""" +
-        s""""srcShards":[${srcCommitted.head._3.sorted.mkString(",")}],"""
-      else ""
-    writeSmallFile(fs, s"$genDir/.manifest.json.tmp",
-      s"""{"seed":${m0.seed},"nCentroids":${m0.nCentroids},""" +
-        s""""requested":${m0.requested},""" +
-        s""""buildId":"$buildId","shards":[0],""" +
-        legacyProv + s""""srcs":"$srcsField"}""")
-    require(fs.rename(
-      new org.apache.hadoop.fs.Path(s"$genDir/.manifest.json.tmp"),
-      new org.apache.hadoop.fs.Path(s"$genDir/manifest.json")),
-      s"compactIvfIndex: manifest rename inside $genDir failed — the new " +
-        "generation is uncommitted and the live one untouched; rerun")
+    val rows = spark.read.parquet(s"$dir/${merged._1}/postings.parquet")
+      .count()
     // the fresh tail, created BEFORE the flip so the pointer never names
-    // a missing generation: centroids copy (appends assign against them)
-    // + generation markers + manifest; postings intentionally EMPTY (the
+    // a missing generation: a centroids copy (appends assign against
+    // them), markers and manifest; postings intentionally EMPTY (the
     // phantom manifest shard 0 anchors the append id sequence — queries
     // skip the generation entirely until a cell dir exists)
-    val tail = if (!freshTail) Seq.empty else {
-      val tId = java.util.UUID.randomUUID().toString
-      val tGen = s"gen-$tId"
-      val tDir = s"$dir/$tGen"
-      cents.write.mode("overwrite").parquet(s"$tDir/centroids.parquet")
-      writeSmallFile(fs, s"$tDir/centroids.parquet/_BUILD_ID", tId)
-      writeSmallFile(fs, s"$tDir/postings.parquet/_BUILD_ID", tId)
-      writeSmallFile(fs, s"$tDir/.manifest.json.tmp",
-        s"""{"seed":${m0.seed},"nCentroids":${m0.nCentroids},""" +
-          s""""requested":${m0.requested},"buildId":"$tId","shards":[0]}""")
-      require(fs.rename(
-        new org.apache.hadoop.fs.Path(s"$tDir/.manifest.json.tmp"),
-        new org.apache.hadoop.fs.Path(s"$tDir/manifest.json")),
-        s"compactIvfIndexTiered: manifest rename inside $tDir failed — " +
-          "the tail is uncommitted and the live pointer untouched; rerun")
-      Seq((tGen, tId))
-    }
-    val newGens = keepPrefix ++ Seq(gen) ++ tail.map(_._1)
-    val content = newGens.mkString(",")
-    flipCurrent(fs, spark.sparkContext.hadoopConfiguration, dir, content)
-    if (!retainSuperseded) cleanupAfterFlip(fs, dir, newGens.toSet)
-    finalizeMaintenance(fs, dir, content,
-      Seq((gen, buildId, false)) ++ tail.map(t => (t._1, t._2, true)),
-      retainedGens = keepPrefix)
+    val tail = if (!freshTail) Seq.empty else Seq(writeIvfGeneration(fs,
+      dir, cents, m0.seed, m0.nCentroids, m0.requested)(_ => None))
+    commitIvfGens(spark, fs, dir, keepPrefix, merged +: tail,
+      emptyTail = freshTail, retainSuperseded)
     rows
   }
 
@@ -1168,14 +1052,13 @@ object Ann {
   def appendIvfShardWithCount(data: DataFrame, idCol: String,
                               vecCol: String, dir: String): (Int, Int) = {
     val spark = data.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // resolve the live generation ONCE — every path below (markers,
     // staging, renames) is inside it, so a maintenance flip racing this
     // append can never split it across generations (it lands whole in the
     // superseded dir and vanishes with it; single-writer maintenance rules
     // that race out anyway)
-    val g = resolveIvfDir(fs, dir)
+    val g = resolveIvfGens(fs, dir).last
     val m = readIvfManifest(fs, g)
     // generation check before writing anything
     requireMarkersMatch(fs, g, m.buildId)
@@ -1203,7 +1086,7 @@ object Ann {
         s"appendIvfShard: commit marker for claimed shard $shardId " +
           s"appeared at $g after the committed-shard listing — claim " +
           "fencing was bypassed; rebuild the index")
-      def liveParts = fs.globStatus(new org.apache.hadoop.fs.Path(
+      def liveParts = fs.globStatus(new Path(
         s"$g/postings.parquet/cell=*/shard=$shardId"))
       Option(liveParts).foreach(_.foreach(s => fs.delete(s.getPath, true)))
       val cents = spark.read.parquet(s"$g/centroids.parquet")
@@ -1223,14 +1106,14 @@ object Ann {
         .parquet(s"$staging/postings.parquet")
       // move the staged shard=N leaf dirs into the live tree — the
       // claimed id makes every destination unique, so no rename collides
-      val staged = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
+      val staged = Option(fs.globStatus(new Path(
         s"$staging/postings.parquet/cell=*/shard=$shardId")))
         .map(_.toSeq).getOrElse(Seq.empty)
       staged.foreach { st =>
-        val destCell = new org.apache.hadoop.fs.Path(
+        val destCell = new Path(
           s"$g/postings.parquet/${st.getPath.getParent.getName}")
         if (!fs.exists(destCell)) fs.mkdirs(destCell)
-        val dest = new org.apache.hadoop.fs.Path(destCell, st.getPath.getName)
+        val dest = new Path(destCell, st.getPath.getName)
         require(fs.rename(st.getPath, dest),
           s"appendIvfShard: rename ${st.getPath} -> $dest failed; " +
             "aborting before the commit marker (torn append is invisible, " +
@@ -1255,7 +1138,7 @@ object Ann {
         // (r9 advice).
         try {
           if (!fs.exists(commitMarker(g, m.buildId, shardId))) {
-            Option(fs.globStatus(new org.apache.hadoop.fs.Path(
+            Option(fs.globStatus(new Path(
                 s"$g/postings.parquet/cell=*/shard=$shardId")))
               .foreach(_.foreach(s => fs.delete(s.getPath, true)))
             fs.delete(claimMarker(g, m.buildId, shardId), false)
@@ -1263,40 +1146,41 @@ object Ann {
         } catch { case _: java.io.IOException => () } // keep the real error
         throw e
     } finally {
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+      fs.delete(new Path(staging), true)
     }
   }
 
   private def claimMarker(dir: String, buildId: String, id: Int) =
-    new org.apache.hadoop.fs.Path(
-      s"$dir/postings.parquet/_SHARD_CLAIM_${buildId}_$id")
+    new Path(s"$dir/postings.parquet/_SHARD_CLAIM_${buildId}_$id")
   private def commitMarker(dir: String, buildId: String, id: Int) =
-    new org.apache.hadoop.fs.Path(
-      s"$dir/postings.parquet/_SHARD_COMMIT_${buildId}_$id")
+    new Path(s"$dir/postings.parquet/_SHARD_COMMIT_${buildId}_$id")
 
-  /** Manifest base shards plus marker-committed appended shards. The
-    * generation and id are in the marker NAME, so this is one listStatus
-    * and no file reads (a year of daily appends on an object store would
-    * otherwise pay ~365 serial round trips per query batch); stale
-    * markers from other generations and stray non-protocol names simply
-    * don't match the anchored pattern. */
   /** Whether a generation's postings tree holds ANY partition dir — a
     * tiered index's fresh tail is created empty (manifest + centroids +
     * _BUILD_ID, zero cells) and readers skip it until appends land. */
-  private def hasPostingData(fs: org.apache.hadoop.fs.FileSystem,
-                             gen: String): Boolean =
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"$gen/postings.parquet/cell=*"))).exists(_.nonEmpty)
+  private def hasPostingData(fs: FileSystem, gen: String): Boolean =
+    Option(fs.globStatus(new Path(s"$gen/postings.parquet/cell=*")))
+      .exists(_.nonEmpty)
 
-  private def committedShards(fs: org.apache.hadoop.fs.FileSystem,
-                              dir: String, m: IvfManifest): Seq[Int] = {
+  /** Manifest base shards plus marker-committed appended shards. */
+  private def committedShards(fs: FileSystem, dir: String,
+                              m: IvfManifest): Seq[Int] =
+    (m.shards ++ commitMarkerIds(fs, s"$dir/postings.parquet", m.buildId))
+      .distinct
+
+  /** The shard ids of `buildId`'s `_SHARD_COMMIT_` markers under a
+    * postings dir (none when it is absent). The generation and id are in
+    * the marker NAME, so this is one listStatus and no file reads (a year
+    * of daily appends on an object store would otherwise pay ~365 serial
+    * round trips per query batch); stale markers from other generations
+    * and stray non-protocol names simply don't match the anchored
+    * pattern. */
+  private def commitMarkerIds(fs: FileSystem, postings: String,
+                              buildId: String): Seq[Int] = {
     val re = ("^_SHARD_COMMIT_" +
-      java.util.regex.Pattern.quote(m.buildId) + "_(\\d+)$").r
-    val st = fs.listStatus(
-      new org.apache.hadoop.fs.Path(s"$dir/postings.parquet"))
-    val marked = if (st == null) Seq.empty[Int] else st.toSeq.flatMap(s =>
-      re.findFirstMatchIn(s.getPath.getName).map(_.group(1).toInt))
-    (m.shards ++ marked).distinct
+      java.util.regex.Pattern.quote(buildId) + "_(\\d+)$").r
+    GenerationPointer.list(fs, postings).flatMap(st =>
+      re.findFirstMatchIn(st.getPath.getName).map(_.group(1).toInt))
   }
 
   /** Create-if-absent; false iff the path already exists. Atomic on HDFS
@@ -1311,8 +1195,8 @@ object Ann {
     * wrapping AlreadyBeingCreatedException whose message need not contain
     * the word at all. Every other IOException propagates as the error it
     * is (network, permission, quota). */
-  private def tryExclusiveCreate(fs: org.apache.hadoop.fs.FileSystem,
-                                 path: org.apache.hadoop.fs.Path): Boolean =
+  private def tryExclusiveCreate(fs: FileSystem,
+                                 path: Path): Boolean =
     try {
       fs.create(path, false).close()
       true
@@ -1344,9 +1228,11 @@ object Ann {
       n.endsWith(".FileAlreadyExistsException"))
   }
 
-  /** `srcBuildId`/`srcShards` (compacted generations only): the FOLD
-    * PROVENANCE — which source generation and exactly which committed
-    * shards this generation was folded from. Post-flip cleanup fences on
+  /** `srcs` (compacted generations only): the FOLD PROVENANCE — which
+    * source generations and exactly which of their committed shards this
+    * generation was folded from. Generations compacted by earlier code
+    * carry a single source as `srcBuildId`/`srcShards` instead (still
+    * read, so their fence holds). Post-flip cleanup fences on
     * it: a shard committed into the source generation AFTER the fold's
     * snapshot (an append racing the compact, a single-writer breach) has
     * rows in NO live generation, and deleting the superseded dir would
@@ -1370,13 +1256,13 @@ object Ann {
         .groupBy(_._1).view.mapValues(_.flatMap(_._2).toSet).toSeq
   }
 
-  private def readIvfManifest(fs: org.apache.hadoop.fs.FileSystem,
+  private def readIvfManifest(fs: FileSystem,
                               dir: String): IvfManifest = {
-    val manifest = new org.apache.hadoop.fs.Path(s"$dir/manifest.json")
+    val manifest = new Path(s"$dir/manifest.json")
     require(fs.exists(manifest),
       s"IVF index at $dir has no manifest.json — torn or pre-manifest " +
         "build; rerun buildIvfIndex")
-    val mtext = readSmallFile(fs, manifest)
+    val mtext = GenerationPointer.readFile(fs, manifest.toString)
     def num(k: String): Long = (s""""$k":(-?\\d+)""").r
       .findFirstMatchIn(mtext).map(_.group(1).toLong)
       .getOrElse(throw new IllegalStateException(
@@ -1408,29 +1294,18 @@ object Ann {
       buildId, shards, srcBuildId, srcShards, srcs)
   }
 
-  private def requireMarkersMatch(fs: org.apache.hadoop.fs.FileSystem,
+  private def requireMarkersMatch(fs: FileSystem,
                                   dir: String, buildId: String): Unit =
-    Seq("centroids.parquet", "postings.parquet").foreach { comp =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$comp/_BUILD_ID")
+    IvfComponents.foreach { comp =>
+      val p = new Path(s"$dir/$comp/_BUILD_ID")
       require(fs.exists(p),
         s"IVF index at $dir: $comp has no _BUILD_ID marker — torn or " +
           "pre-generation build; rerun buildIvfIndex")
-      val got = readSmallFile(fs, p).trim
+      val got = GenerationPointer.readFile(fs, p.toString).trim
       require(got == buildId,
         s"IVF index at $dir: $comp is from build $got but the manifest " +
           s"declares $buildId — mixed-generation index; rebuild")
     }
-
-  // tiny-file IO delegates to the pointer layer's single implementation
-  // (r12 verdict 5: three hand-rolled copies existed; this is now the one)
-  private def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-                             path: String, content: String): Unit =
-    graft.io.AtomicPointer.writeSmall(fs,
-      new org.apache.hadoop.fs.Path(path), content)
-
-  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-                            path: org.apache.hadoop.fs.Path): String =
-    graft.io.AtomicPointer.readSmall(fs, path)
 
   /** Query a [[buildIvfIndex]] index: assign each query to its `nProbe`
     * nearest centroids (broadcast of the centroid table — no corpus
@@ -1453,8 +1328,7 @@ object Ann {
     // maintenance flip between planning and execution can never mix
     // generations inside one query (it can only make the WHOLE query fail
     // loudly if the superseded tree is deleted mid-scan).
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val gms = resolveAndReadManifests(fs, dir)
     val (g0, m0) = gms.head
     // tiered generations were all assigned against the SAME frozen

@@ -395,7 +395,7 @@ object Dedup {
     * tracked handle, released here — unlike localCheckpoint blocks,
     * which only the ContextCleaner reclaims) and executor-loss
     * recomputability (the RDD still carries its shuffle lineage). */
-  private[operators] def propagateLabels(p: DataFrame, maxIter: Int): DataFrame = {
+  private def propagateLabels(p: DataFrame, maxIter: Int): DataFrame = {
     val spark = p.sparkSession
     val edges = p.union(p.select(col("b").as("a"), col("a").as("b")))
     def cut(df: DataFrame): DataFrame =
@@ -524,16 +524,12 @@ object Dedup {
       members => keepBestSurvivors(docs, members, idCol, rankCol))
 
   /** The cluster resolution both corpus-dedup variants share (see
-    * [[dedupCorpus]]). The LSH pairs are persisted and counted FIRST: one
-    * execution of the pair pipeline, read by both the path decision and
-    * the chosen path (take(n) here would re-run the verify stage under
-    * incremental-limit scale-up AND leave the pipeline unexecuted for the
-    * fall-through). No pairs: the corpus as is. At most
-    * `smallGraphThreshold` pairs: the driver-side union-find, whose
-    * id -> root map `local` turns into the variant's frame, which
-    * `survivors` reads as a broadcast. Above it: min-label propagation,
-    * whose (id, canonical) labels `slim` projects to the variant's frame,
-    * persisted and counted here and released by the returned hook. */
+    * [[dedupCorpus]]), over the LSH pairs ([[resolvePairGraph]]). No
+    * pairs: the corpus as is. The driver path's id -> root map `local`
+    * turns into the variant's frame, which `survivors` reads as a
+    * broadcast; the distributed path's (id, canonical) labels `slim`
+    * projects to the variant's frame, persisted and counted here and
+    * released by the returned hook. */
   private def resolveDuplicates(docs: DataFrame, idCol: String,
                                 textCol: String, shingleN: Int, bands: Int,
                                 rows: Int, minJaccard: Double,
@@ -550,29 +546,50 @@ object Dedup {
     Tuning.withAutoShuffleBytes(docs) {
       val (pairsPlan, sh) = lshPairsStaged(docs, idCol, textCol, shingleN,
         bands, rows, minJaccard, maxBucket)
-      val p = pairsPlan.select(col("a"), col("b"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nPairs = p.count()
-      sh.unpersist()   // pairs are materialized; the shingle cache is dead
-      if (nPairs <= smallGraphThreshold) {   // threshold 0 ⇒ always distributed
-        val taken = p.collect()              // a cache scan, nPairs is bounded
-        p.unpersist()
-        if (taken.isEmpty) Staged(docs, () => ())
-        else Staged(survivors(broadcast(local(unionFindRoots(taken)))), () => ())
-      } else {
-        val labels = propagateLabels(p, maxIter = 5)
-        p.unpersist()
-        val kept = slim(labels).persist(StorageLevel.MEMORY_AND_DISK)
-        kept.count()
-        labels.unpersist()
-        Staged(survivors(kept), () => kept.unpersist())
+      // once the pairs are materialized the shingle cache is dead
+      resolvePairGraph(pairsPlan.select(col("a"), col("b")),
+          smallGraphThreshold, maxIter = 5,
+          counted = () => sh.unpersist()) match {
+        case Left(roots) if roots.isEmpty => Staged(docs, () => ())
+        case Left(roots) =>
+          Staged(survivors(broadcast(local(roots))), () => ())
+        case Right(labels) =>
+          val kept = slim(labels).persist(StorageLevel.MEMORY_AND_DISK)
+          kept.count()
+          labels.unpersist()
+          Staged(survivors(kept), () => kept.unpersist())
       }
     }
   }
 
+  /** The collect-or-propagate switch of corpus dedup and
+    * [[Graph.connectedComponents]]. The (a, b) `pairs` are persisted and
+    * counted once, read by both the decision and the chosen path (take(n)
+    * would re-run the upstream); `counted` runs right after. At most
+    * `smallGraphThreshold` pairs (0 ⇒ always distributed): the driver
+    * union-find's id -> root map, nothing retained. Above: the persisted
+    * (id, canonical) labels, for the caller to release. */
+  private[operators] def resolvePairGraph(
+      pairs: DataFrame, smallGraphThreshold: Int, maxIter: Int,
+      counted: () => Unit = () => ()): Either[Map[Any, Any], DataFrame] = {
+    val p = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    val n = p.count()
+    counted()
+    if (n <= smallGraphThreshold) {
+      val taken = p.collect()   // a cache scan, n is bounded
+      p.unpersist()
+      Left(unionFindRoots(taken))
+    } else {
+      val labels = propagateLabels(p, maxIter)
+      p.unpersist()
+      Right(labels)
+    }
+  }
+
   /** A driver-side local relation of `rows` under `fields`. */
-  private def localFrame(spark: SparkSession, fields: Seq[(String, DataType)],
-                         rows: Seq[Row]): DataFrame =
+  private[operators] def localFrame(spark: SparkSession,
+                                    fields: Seq[(String, DataType)],
+                                    rows: Seq[Row]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*),
       StructType(fields.map { case (n, t) => StructField(n, t) }))
 
@@ -595,8 +612,7 @@ object Dedup {
     * map, root = the cluster's smallest id. Ids must be mutually
     * Comparable (numeric/string — anything the pair join could have
     * equated). */
-  private[operators] def unionFindRoots(
-      pairs: Array[Row]): Map[Any, Any] = {
+  private def unionFindRoots(pairs: Array[Row]): Map[Any, Any] = {
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]
     def find(x: Any): Any = {
       var root = x

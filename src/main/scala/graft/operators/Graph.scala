@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -50,28 +50,19 @@ object Graph {
     val idType = edges.schema(srcCol).dataType
     require(edges.schema(dstCol).dataType == idType,
       s"src/dst types must match (got $idType vs ${edges.schema(dstCol).dataType})")
-    val p = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull)
-      .dropDuplicates("a", "b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = p.count()
-    if (nEdges <= smallGraphThreshold) {   // threshold 0 ⇒ always distributed
-      val taken = p.collect()              // a cache scan, nEdges is bounded
-      p.unpersist()
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", idType),
-        org.apache.spark.sql.types.StructField("component", idType)))
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        java.util.Arrays.asList(
-          Dedup.unionFindRoots(taken).toSeq.map { case (id, root) =>
-            org.apache.spark.sql.Row(id, root)
-          }: _*)
-      return Dedup.Staged(spark.createDataFrame(rows, schema), () => ())
+    Dedup.resolvePairGraph(
+        edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+          .where(col("a").isNotNull && col("b").isNotNull)
+          .dropDuplicates("a", "b"),
+        smallGraphThreshold, maxIter) match {
+      case Left(roots) =>
+        Dedup.Staged(Dedup.localFrame(spark,
+          Seq("id" -> idType, "component" -> idType),
+          roots.toSeq.map { case (id, root) => Row(id, root) }), () => ())
+      case Right(labels) =>
+        Dedup.Staged(labels.withColumnRenamed("canonical", "component"),
+          () => labels.unpersist())
     }
-    val labels = Dedup.propagateLabels(p, maxIter)
-    p.unpersist()
-    Dedup.Staged(labels.withColumnRenamed("canonical", "component"),
-      () => labels.unpersist())
   }
 
   /** Multi-source BFS hop distances over a DIRECTED edge list: one row
