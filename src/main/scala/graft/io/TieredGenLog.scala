@@ -220,75 +220,83 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
     * nothing has been ingested. Runs the crashed-vs-lost discrimination
     * described on the class. */
   def effective(spark: SparkSession): Option[Seq[DataFrame]] = {
+    val state = readState(spark)
+    views(spark, state, completeBatches(spark, state))
+  }
+
+  /** The pointerless half of the crashed-vs-lost discrimination (see the
+    * class doc): throws when a base generation on disk is not the orphan
+    * of a fold that crashed before its flip. */
+  private def requirePointerNotLost(spark: SparkSession): Unit = {
     val hfs = fs(spark)
-    readState(spark) match {
-      case None =>
-        val bases = GenerationPointer.list(hfs, idxDir)
-          .filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith("base-"))
-          .map(_.getPath.getName)
-        lazy val batchSet = unfoldedBatches(spark, None).toSet
-        val baseSet = bases.toSet
-        val lost = bases.filter { b =>
-          // marker tokens: batch ids always; a MAJOR tiered fold also
-          // lists the generation names it consumed — "crashed" requires
-          // EVERY listed source (dir or generation) still on disk
-          val srcs: Option[(Seq[Long], Seq[String])] =
-            try {
-              val toks = GenerationPointer.readFile(hfs,
-                  s"$idxDir/$b/_FOLDED_UPTO")
-                .split(",").map(_.trim).filter(_.nonEmpty)
-              val (genToks, idToks) = toks.partition(_.startsWith("base-"))
-              val ids = idToks.flatMap(t => scala.util.Try(t.toLong).toOption)
-              if (toks.nonEmpty && ids.length == idToks.length &&
-                  genToks.forall(Folded.isGen))
-                Some((ids.toSeq, genToks.toSeq))
-              else None
-            } catch { case _: java.io.IOException => None }
-          srcs match {
-            case Some((ids, gs)) =>
-              !(ids.forall(batchSet.contains) && gs.forall(baseSet.contains))
-            case None => true
-          }
-        }
-        if (lost.nonEmpty) throw new IllegalStateException(
-          s"$kind at $idxDir has folded generation(s) " +
-            s"${lost.sorted.mkString(",")} but no FOLDED pointer, and " +
-            "their source batch dirs are not (fully) on disk — the " +
-            "pointer was lost (deletion or partial restore), and reading " +
-            "only the unfolded batches would silently forget the folded " +
-            "history. Restore the pointer (content: '<maxFoldedBatch> " +
-            "<gen1>,<gen2>,...'), or — if the fold provably never " +
-            "committed (legacy pre-marker orphan) — delete the base dir; " +
-            "otherwise rebuild the index.")
-        val complete = completeBatches(spark, None)
-        if (complete.isEmpty) None
-        else Some(components.map(c => spark.read.parquet(
-          complete.map(b => s"$idxDir/$c/batch=$b"): _*)))
-      case Some(f) =>
-        // all live generations (base + minor-fold siblings) union equally
-        val gens = components.map(c =>
-          f.gens.map(g => spark.read.parquet(s"$idxDir/$g/$c"))
-            .reduce(_ unionByName _))
-        val unfolded = completeBatches(spark, Some(f))
-        if (unfolded.isEmpty) Some(gens)
-        else Some(components.zip(gens).map { case (c, g) =>
-          // EXPLICIT live dirs, never the component root: a root read's
-          // partition discovery lists EVERY batch dir — including
-          // replay leftovers at/below the boundary that a concurrent
-          // sweep is deleting — and a reader whose query needs none of
-          // those rows still dies on the listing race (caught live by
-          // LexIngestScale at 50×: an empty-looking root between a
-          // sweep and the next shard write threw
-          // UNABLE_TO_INFER_SCHEMA into an innocent reader). Explicit
-          // paths keep a new-pointer reader's footprint disjoint from
-          // everything a sweep may touch; only a reader still scanning
-          // under the OLD pointer races deletion, and that window is
-          // what the retain + aged-sweep drain contract bounds.
-          g.unionByName(spark.read.parquet(
-            unfolded.map(b => s"$idxDir/$c/batch=$b"): _*))
-        })
+    val bases = GenerationPointer.list(hfs, idxDir)
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith("base-"))
+      .map(_.getPath.getName)
+    lazy val batchSet = unfoldedBatches(spark, None).toSet
+    val baseSet = bases.toSet
+    val lost = bases.filter { b =>
+      // marker tokens: batch ids always; a MAJOR tiered fold also
+      // lists the generation names it consumed — "crashed" requires
+      // EVERY listed source (dir or generation) still on disk
+      val srcs: Option[(Seq[Long], Seq[String])] =
+        try {
+          val toks = GenerationPointer.readFile(hfs,
+              s"$idxDir/$b/_FOLDED_UPTO")
+            .split(",").map(_.trim).filter(_.nonEmpty)
+          val (genToks, idToks) = toks.partition(_.startsWith("base-"))
+          val ids = idToks.flatMap(t => scala.util.Try(t.toLong).toOption)
+          if (toks.nonEmpty && ids.length == idToks.length &&
+              genToks.forall(Folded.isGen))
+            Some((ids.toSeq, genToks.toSeq))
+          else None
+        } catch { case _: java.io.IOException => None }
+      srcs match {
+        case Some((ids, gs)) =>
+          !(ids.forall(batchSet.contains) && gs.forall(baseSet.contains))
+        case None => true
+      }
     }
+    if (lost.nonEmpty) throw new IllegalStateException(
+      s"$kind at $idxDir has folded generation(s) " +
+        s"${lost.sorted.mkString(",")} but no FOLDED pointer, and " +
+        "their source batch dirs are not (fully) on disk — the " +
+        "pointer was lost (deletion or partial restore), and reading " +
+        "only the unfolded batches would silently forget the folded " +
+        "history. Restore the pointer (content: '<maxFoldedBatch> " +
+        "<gen1>,<gen2>,...'), or — if the fold provably never " +
+        "committed (legacy pre-marker orphan) — delete the base dir; " +
+        "otherwise rebuild the index.")
+  }
+
+  /** The component views over `state`'s live generations (base and
+    * minor-fold siblings union equally) plus the complete unfolded
+    * `batches`; None when both are empty. Without a pointer, runs the
+    * crashed-vs-lost discrimination first. */
+  private def views(spark: SparkSession, state: Option[FoldState],
+                    batches: Seq[Long]): Option[Seq[DataFrame]] = {
+    if (state.isEmpty) requirePointerNotLost(spark)
+    val gens = state.map(_.gens).getOrElse(Seq.empty)
+    if (gens.isEmpty && batches.isEmpty) None
+    else Some(components.map { c =>
+      // EXPLICIT live dirs, never the component root: a root read's
+      // partition discovery lists EVERY batch dir — including replay
+      // leftovers at/below the boundary that a concurrent sweep is
+      // deleting — and a reader whose query needs none of those rows
+      // still dies on the listing race (caught live by LexIngestScale at
+      // 50×: an empty-looking root between a sweep and the next shard
+      // write threw UNABLE_TO_INFER_SCHEMA into an innocent reader).
+      // Explicit paths keep a new-pointer reader's footprint disjoint
+      // from everything a sweep may touch; only a reader still scanning
+      // under the OLD pointer races deletion, and that window is what the
+      // retain + aged-sweep drain contract bounds.
+      val shards =
+        if (batches.isEmpty) Seq.empty
+        else Seq(spark.read.parquet(
+          batches.map(b => s"$idxDir/$c/batch=$b"): _*))
+      (gens.map(g => spark.read.parquet(s"$idxDir/$g/$c")) ++ shards)
+        .reduce(_ unionByName _)
+    })
   }
 
   /** Fold unfolded batch shards into a fresh `base-<uuid>` generation
@@ -347,7 +355,9 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
       srcIds.map(b => components.map(c =>
         GenerationPointer.pathBytes(hfs, s"$idxDir/$c/batch=$b")).sum).sum)
     val cur: Seq[DataFrame] =
-      if (major) effective(spark).getOrElse(
+      // major source: the effective view, from the pointer read and the
+      // batch probes above
+      if (major) views(spark, state, srcIds).getOrElse(
         throw new IllegalStateException(
           s"fold: no index at $idxDir — nothing has been ingested"))
       else {

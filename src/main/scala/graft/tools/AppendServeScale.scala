@@ -33,7 +33,7 @@ object AppendServeScale {
 
     val dir = java.nio.file.Files.createTempDirectory("appendserve").toString
     val nBase = base.count()
-    val nCentroids = math.max(16, math.ceil(math.sqrt(nBase.toDouble)).toInt)
+    val nCentroids = Harness.sqrtCells(nBase)
     val t0 = System.nanoTime()
     graft.operators.Ann.buildIvfIndex(base, "vec_id", "embedding", dir,
       nCentroids = nCentroids, seed = 42L, distributedFit = true)

@@ -17,10 +17,11 @@ object CompactScale {
     val embDir = args.head
     val days = if (args.length > 1) args(1).toInt else 8
     val spark = Harness.session()
+    val meter = new Harness.Meter(spark)
     val emb = spark.read.parquet(s"$embDir/embeddings.parquet")
     val n = emb.count()
     val nCents = if (args.length > 2) args(2).toInt
-      else math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt)
+      else Harness.sqrtCells(n)
     // base = first half; each "day" appends an equal slice of the rest
     val ids = emb.select(min("vec_id"), max("vec_id")).head()
     val (lo, hi) = (ids.getLong(0), ids.getLong(1))
@@ -44,13 +45,11 @@ object CompactScale {
       wall
     }
     val queries = emb.orderBy("vec_id").limit(64)
-    def probe(tag: String): Unit = (1 to 3).foreach { i =>
-      spark.catalog.clearCache(); System.gc()
-      val tq = System.nanoTime()
-      val rows = graft.operators.Ann.queryIvfIndex(
-        queries, "vec_id", "embedding", dir, k = 5, nProbe = 4).count()
-      println(f"COMPACT query_$tag run$i ${(System.nanoTime() - tq) / 1e9}%.2f s ($rows rows)")
-    }
+    def probe(tag: String): Unit =
+      Harness.runs(meter, s"compact_query_$tag", 3) {
+        graft.operators.Ann.queryIvfIndex(
+          queries, "vec_id", "embedding", dir, k = 5, nProbe = 4).count()
+      }(rows => s"rows=$rows")
     // resolve per call: the compact flips CURRENT to a new generation
     def files(): Long = Harness.parquetFiles(java.nio.file.Paths.get(
       graft.operators.Ann.resolveIvfDir(spark, dir), "postings.parquet"))

@@ -54,16 +54,13 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val dir = args.head
+    val wanted = Harness.targets(args.tail.toSeq, targets.keys.toSeq.sorted)
     val spark = Harness.session(cores = 8)
-    args.tail.foreach { target =>
-      val (name, params) = target.split("=", 2) match {
-        case Array(n, p) => (n, p.split(",").toSeq)
-        case Array(n) => (n, Nil)
-      }
-      println(s"\n========== $target ==========")
-      val (df, release) = targets.get(name)
-        .map(_(spark, dir, params))
-        .getOrElse((graft.SparkEntry.queries(name)(spark, dir), () => ()))
+    args.tail.zip(wanted).foreach { case (arg, t) =>
+      println(s"\n========== $arg ==========")
+      val (df, release) = targets.get(t.name)
+        .map(_(spark, dir, t.params))
+        .getOrElse((graft.SparkEntry.queries(t.name)(spark, dir), () => ()))
       df.explain("formatted")
       release()
     }

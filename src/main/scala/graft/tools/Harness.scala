@@ -8,11 +8,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** The one dev-tool harness: every main under `graft.tools` builds its
-  * session with [[Harness.session]], reads executor task counters
-  * through a [[Harness.Meter]], runs its serve-under-load readers as
-  * [[Harness.Readers]] and measures index dirs with the disk meter below,
-  * so all tools run the same profile and count the same things the same
-  * way. */
+  * session with [[Harness.session]], resolves its command-line targets
+  * through [[Harness.targets]], reads executor task counters through a
+  * [[Harness.Meter]], times cold-cache runs with [[Harness.runs]], runs
+  * its serve-under-load readers as [[Harness.Readers]] and measures index
+  * dirs with the disk meter below, so all tools run the same profile and
+  * count the same things the same way. */
 object Harness {
 
   /** The dev-tool session profile — `graft.Bench`'s conf set:
@@ -61,7 +62,7 @@ object Harness {
     * process. Task-end events reach listeners asynchronously, so every
     * read drains the listener bus first; without that, events that arrive
     * late would be counted in the next measurement's columns. */
-  final class Meter(spark: SparkSession) extends SparkListener {
+  final class Meter(val spark: SparkSession) extends SparkListener {
     private val tasks, runMs, cpuNs, gcMs, spill, shufRead, shufWrite =
       new AtomicLong
     spark.sparkContext.addSparkListener(this)
@@ -98,6 +99,51 @@ object Harness {
       Metered(result, wallS, snapshot() - before)
     }
   }
+
+  /** `n` cold-cache runs of `body` in a warm JVM — `graft.Bench`'s timing
+    * protocol, and the only place a tool clears the cache. Before each run
+    * the session's cache is cleared and a GC lets the ContextCleaner drop
+    * the blocks earlier runs persisted, so no run reads another's cache.
+    * Each run is metered on its own and prints
+    * `TIMING <label> run<i> <wall> s <note> [tasks …]`; `note` renders the
+    * run's result after its wall is taken.
+    * Read the median of runs 2..n as the steady state. */
+  def runs[T](meter: Meter, label: String, n: Int)(body: => T)
+             (note: T => String): Seq[Metered[T]] =
+    (1 to n).map { i =>
+      meter.spark.catalog.clearCache()
+      System.gc()
+      val run = meter.delta(body)
+      println(f"TIMING $label run$i ${run.wallS}%.2f s " +
+        s"${note(run.result)} ${run.tasks.columns}")
+      run
+    }
+
+  /** A command-line target: `name`, or `name=p1,p2,…` with parameters. */
+  final case class Target(name: String, params: Seq[String])
+
+  /** Parses a tool's target arguments. A name must be one of the tool's
+    * `own` targets or a [[graft.SparkEntry]] query; any other fails here,
+    * before the tool builds a session or runs a job, with the valid names
+    * listed. */
+  def targets(args: Seq[String], own: Seq[String]): Seq[Target] = {
+    val queries = graft.SparkEntry.queries.keySet
+    val parsed = args.map(_.split("=", 2) match {
+      case Array(n, p) => Target(n, p.split(",").toSeq)
+      case Array(n) => Target(n, Nil)
+    })
+    val unknown =
+      parsed.map(_.name).filterNot(n => own.contains(n) || queries(n))
+    require(unknown.isEmpty, s"unknown target(s) ${unknown.mkString(", ")}; " +
+      s"valid: ${own.mkString(", ")} or a SparkEntry query " +
+      s"(${queries.toSeq.sorted.mkString(", ")})")
+    parsed
+  }
+
+  /** The IVF cell count the tools size an index of `n` vectors with:
+    * ~√n, at least 16. */
+  def sqrtCells(n: Long): Int =
+    math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt)
 
   /** `n` daemon reader threads, each running `body` in a loop until
     * [[stop]] — the serving side of a serve-under-load rehearsal. Every

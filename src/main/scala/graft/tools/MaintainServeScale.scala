@@ -24,7 +24,7 @@ object MaintainServeScale {
     val emb = graft.Tables.embeddings(spark, args.head)
     val n = emb.count()
     val nCents = if (args.length > 1) args(1).toInt
-      else math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt)
+      else Harness.sqrtCells(n)
     val ids = emb.select(min("vec_id"), max("vec_id")).head()
     val (lo, hi) = (ids.getLong(0), ids.getLong(1))
     val mid = lo + (hi - lo) / 2

@@ -39,6 +39,53 @@ class HarnessSpec extends SparkSuite {
     }
   }
 
+  test("Harness.runs recomputes what an earlier run persisted and meters each run alone") {
+    val meter = new Harness.Meter(spark)
+    try {
+      // a shuffled frame the body persists: a cache hit would skip the
+      // map stage, so run 2 would read fewer tasks than run 1
+      val df = spark.range(0, 1000, 1, 5).repartition(3).toDF("id")
+      val total = meter.delta {
+        Harness.runs(meter, "spec", 2) {
+          df.persist()
+          df.count()
+        }(n => s"rows=$n")
+      }
+      val Seq(r1, r2) = total.result
+      assert(r1.result == 1000L && r2.result == 1000L)
+      assert(r1.tasks.tasks > 0, r1.tasks.toString)
+      assert(r2.tasks == r1.tasks.copy(runMs = r2.tasks.runMs,
+        cpuMs = r2.tasks.cpuMs, gcMs = r2.tasks.gcMs),
+        s"run 2 ${r2.tasks} vs run 1 ${r1.tasks}")
+      assert(r1.tasks.tasks + r2.tasks.tasks == total.tasks.tasks)
+    } finally {
+      spark.catalog.clearCache()
+      spark.sparkContext.removeSparkListener(meter)
+    }
+  }
+
+  test("Explain and Time reject an unknown target before any Spark job, listing the valid ones") {
+    val meter = new Harness.Meter(spark)
+    try {
+      for (main <- Seq[Array[String] => Unit](graft.tools.Explain.main,
+          graft.tools.Time.main)) {
+        val run = meter.delta(intercept[IllegalArgumentException] {
+          main(Array("/nonexistent", "j1_broadcast_join_agg", "no_such_target"))
+        })
+        val msg = run.result.getMessage
+        assert(msg.contains("unknown target(s) no_such_target"), msg)
+        assert(msg.contains("j1_broadcast_join_agg"), msg)
+        assert(run.tasks.tasks == 0, run.tasks.toString)
+      }
+      val msg = intercept[IllegalArgumentException](
+        Harness.targets(Seq("lsh_pairs", "x"), Seq("lsh_pairs"))).getMessage
+      assert(msg.contains("valid: lsh_pairs or a SparkEntry query"), msg)
+      assert(Harness.targets(Seq("lex_serve=a,b", "j1_broadcast_join_agg"),
+          Seq("lex_serve")) == Seq(Harness.Target("lex_serve", Seq("a", "b")),
+        Harness.Target("j1_broadcast_join_agg", Nil)))
+    } finally spark.sparkContext.removeSparkListener(meter)
+  }
+
   test("Readers.report gives per-phase n and nearest-rank p50/p95 walls") {
     // no threads: the test drives the reader call itself, and the body
     // advances a fake clock, so every wall is known exactly
@@ -113,6 +160,26 @@ class HarnessSpec extends SparkSuite {
   test("the settled suffix-pairing A/B switch stays out of the sources") {
     val switch = "graft.suffix." + "pairing" + "Cache"
     val hits = sources("src").filter(p => Files.readString(p).contains(switch))
+    assert(hits.isEmpty, hits.mkString(", "))
+  }
+
+  test("only Harness clears the cache or forces a GC in the tools") {
+    val offenders = sources("src/main/scala/graft/tools")
+      .filterNot(_.getFileName.toString == "Harness.scala")
+      .filter { p =>
+        val src = Files.readString(p)
+        src.contains("catalog.clearCache") || src.contains("System.gc()")
+      }
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("the settled suffix and ANN-rehearsal env switches stay out of the sources") {
+    val switches = Seq("SUFFIX_" + "DIAG", "SUFFIX_" + "SHUFFLE_PARTITIONS",
+      "ANNSCALE_" + "RUNS", "ANNSCALE_" + "PATHS")
+    val hits = sources("src").filter { p =>
+      val src = Files.readString(p)
+      switches.exists(src.contains)
+    }
     assert(hits.isEmpty, hits.mkString(", "))
   }
 }

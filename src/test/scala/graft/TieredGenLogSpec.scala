@@ -1,7 +1,35 @@
 package graft
 
+import java.net.URI
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 import graft.io.TieredGenLog
+
+/** The local filesystem under a `countfs` scheme, logging the metadata
+  * calls an object store bills one by one: file opens, existence probes
+  * and renames, in call order. */
+class CountingFs extends RawLocalFileSystem {
+  override def getScheme: String = "countfs"
+  override def getUri: URI = URI.create("countfs:///")
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    CountingFs.calls.add(s"open ${f.toUri.getPath}")
+    super.open(f, bufferSize)
+  }
+  override def exists(f: Path): Boolean = {
+    CountingFs.calls.add(s"exists ${f.toUri.getPath}")
+    super.exists(f)
+  }
+  override def rename(src: Path, dst: Path): Boolean = {
+    CountingFs.calls.add(s"rename ${src.toUri.getPath}")
+    super.rename(src, dst)
+  }
+}
+
+object CountingFs {
+  val calls = new ConcurrentLinkedQueue[String]()
+}
 
 /** Direct unit pins for the shared generation-log primitive — the two
   * index families exercise it end-to-end (LexStreamSpec,
@@ -142,5 +170,47 @@ class TieredGenLogSpec extends SparkSuite {
     } finally hconf.setBoolean(key, true)
     log.writeShard(frames(0 until 3), 0L)   // markers back on: accepted
     assert(idsOf(log, 0) == Set(0L, 1L, 2L))
+  }
+
+  test("a fold reads FOLDED once and probes each unfolded batch's _SUCCESS markers once") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFs].getName)
+    val dir = java.nio.file.Files.createTempDirectory("glcount").toString
+    val log = new TieredGenLog(s"countfs://$dir/index",
+      Seq("alpha", "beta", "gamma"), "unit index")
+    // the pointer reads and marker probes of one fold, up to its first
+    // write (a rename: the component commits, then the pointer flip) —
+    // the flip's own read-backs are the fence, not the fold's source view
+    def foldCalls(upTo: Long, baseRatio: Double): Seq[String] = {
+      CountingFs.calls.clear()
+      log.fold(spark, upTo, baseRatio = baseRatio)
+      CountingFs.calls.asScala.toSeq.takeWhile(!_.startsWith("rename "))
+    }
+    def successProbes(calls: Seq[String], batches: Seq[Long]): Unit =
+      for (c <- Seq("alpha", "beta", "gamma"); b <- batches) {
+        val probe = s"exists $dir/index/$c/batch=$b/_SUCCESS"
+        assert(calls.count(_ == probe) == 1, s"$probe in $calls")
+      }
+    def pointerReads(calls: Seq[String]): Int =
+      calls.count(_ == s"open $dir/index/FOLDED")
+    log.writeShard(frames(0 until 20), 0L)
+    log.writeShard(frames(20 until 40), 1L)
+    // first fold: major, and no pointer yet
+    val first = foldCalls(1L, baseRatio = 1e6)
+    successProbes(first, Seq(0L, 1L))
+    assert(pointerReads(first) == 0)
+    log.writeShard(frames(40 until 42), 2L)
+    log.writeShard(frames(42 until 44), 3L)
+    val minor = foldCalls(3L, baseRatio = 1e6)
+    assert(log.readState(spark).get.gens.size == 2, "expected a minor fold")
+    successProbes(minor, Seq(2L, 3L))
+    assert(pointerReads(minor) == 1, minor.toString)
+    log.writeShard(frames(44 until 46), 4L)
+    log.writeShard(frames(46 until 48), 5L)
+    val major = foldCalls(5L, baseRatio = 1e-9)
+    assert(log.readState(spark).get.gens.size == 1, "expected a major fold")
+    successProbes(major, Seq(4L, 5L))
+    assert(pointerReads(major) == 1, major.toString)
+    assert(idsOf(log, 1) == (0L until 48L).toSet)
   }
 }
