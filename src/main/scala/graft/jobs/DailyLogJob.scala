@@ -1,8 +1,6 @@
 package graft.jobs
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions
 import graft.io.{KVSink, KVWriter}
 import graft.prep.{Collections, LogIngest}
 
@@ -29,12 +27,8 @@ object DailyLogJob {
     // reference still writes them the hot list (log_analyze.py:234-236)
     val recs = Recommender.recommend(fitted, queries, logBooks, params,
       answerUsers = Some(logBooks))
-    KVWriter.write(recs.books.select(
-      TextFunctions.kvKey("b_like", col("query")).as("key"),
-      TextFunctions.joinIds(col("books")).as("value")), kv)
-    KVWriter.write(recs.users.select(
-      TextFunctions.kvKey("u_similar", col("query")).as("key"),
-      TextFunctions.joinIds(col("users")).as("value")), kv)
+    // both key families in one action, so the log users are scored once
+    KVWriter.write(recs.kvFrame, kv)
     recs
   }
 }

@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.TextFunctions
 import graft.rank.{Blend, Scoring}
 
 /** Set-oriented recommendation scoring shared by the daily-log batch and
@@ -21,7 +22,20 @@ object Recommender {
       defaultUsers: Seq[Long] = Seq(4L, 5L, 6L, 7L, 8L, 9L, 10L, 11L, 12L, 13L))
 
   final case class Recs(books: DataFrame, // (query, books array)
-                        users: DataFrame) // (query, users array)
+                        users: DataFrame) { // (query, users array)
+    /** The KV output plan of both recommendation planes: `b_like:{query}`
+      * and `u_similar:{query}` rows in ONE frame. The books and users
+      * plans share the whole similarity subtree, and a second action
+      * cannot reuse the first one's exchanges; unioned into one plan, the
+      * shared shuffles run once (ReusedExchange). Write it in one action. */
+    def kvFrame: DataFrame =
+      books.select(
+        TextFunctions.kvKey("b_like", col("query")).as("key"),
+        TextFunctions.joinIds(col("books")).as("value"))
+      .unionAll(users.select(
+        TextFunctions.kvKey("u_similar", col("query")).as("key"),
+        TextFunctions.joinIds(col("users")).as("value")))
+  }
 
   /** queries: (userId, cluster, tokens) — pre-assigned query users.
     * ownBooks: (userId, books) — books each query user already has.

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
-import graft.functions.TextFunctions
 import graft.io.{EventSource, KVSink, KVWriter}
 import graft.prep.Collections
 
@@ -172,18 +171,6 @@ object ServeJob {
         "serve from the distributed frame instead")
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
-
-  /** The per-batch KV output plan — ONE frame for both key families so
-    * the shared similarity subtree executes once (ReusedExchange); also
-    * the exact plan the warmup compiles, so first real events pay no
-    * codegen. */
-  private def kvFrame(recs: Recommender.Recs): DataFrame =
-    recs.books.select(
-      TextFunctions.kvKey("b_like", col("query")).as("key"),
-      TextFunctions.joinIds(col("books")).as("value"))
-    .unionAll(recs.users.select(
-      TextFunctions.kvKey("u_similar", col("query")).as("key"),
-      TextFunctions.joinIds(col("users")).as("value")))
 
   /** Wire a raw frame stream (value: String) through decode → score →
     * KV write. Returns the started query.
@@ -382,9 +369,9 @@ object ServeJob {
     // first post-swap batch. The synthetic user id is negative (outside
     // the event-source domain, which enforces userId > 0), its payload is
     // the head of the hot list, and nothing is written to the KV sink.
-    // One action over the SAME kvFrame plan the live batches execute —
-    // two separate counts would run the shared scoring subtree twice
-    // and warm a plan shape production never runs.
+    // One action over the SAME `Recs.kvFrame` plan the live batches
+    // execute — two separate counts would run the shared scoring subtree
+    // twice and warm a plan shape production never runs.
     def warmup(g: Generation): Unit = {
       val spark = frames.sparkSession
       import spark.implicits._
@@ -393,9 +380,9 @@ object ServeJob {
       if (payload.nonEmpty) {
         val fake = spark.createDataset(Seq((-1L, payload)))
           .toDF("userId", "bookIds")
-        kvFrame(scoreBatch(fake, g.fitted, g.collect,
+        scoreBatch(fake, g.fitted, g.collect,
           filterCollected = filterCollected, params = params,
-          corpusPostings = g.corpusPostings, serve = g.serve)).count()
+          corpusPostings = g.corpusPostings, serve = g.serve).kvFrame.count()
         ()
       }
     }
@@ -510,13 +497,8 @@ object ServeJob {
                 corpusPostings = g.corpusPostings, serve = g.serve,
                 stageTimer = stageTimer)
               val tw0 = System.nanoTime()
-              // ONE write action for both key families: the books and
-              // users plans share the whole similarity subtree (queries →
-              // sims), and two separate actions would execute it twice
-              // per batch — cross-action plans cannot reuse exchanges.
-              // Unioned into a single plan, the shared shuffles dedup via
-              // ReusedExchange.
-              KVWriter.write(kvFrame(recs), kv)
+              // ONE write action for both key families (Recs.kvFrame)
+              KVWriter.write(recs.kvFrame, kv)
               stageTimer("kv_write", (System.nanoTime() - tw0) / 1e9)
             }
           } finally {

@@ -31,7 +31,7 @@ object AppendServeScale {
     val queries = emb.select(col("vec_id"), col("embedding")).limit(32)
       .persist(); queries.count()
 
-    val dir = java.nio.file.Files.createTempDirectory("appendserve").toString
+    val dir = Harness.scratchDir("appendserve")
     val nBase = base.count()
     val nCentroids = Harness.sqrtCells(nBase)
     val t0 = System.nanoTime()

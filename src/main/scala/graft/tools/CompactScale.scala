@@ -26,7 +26,7 @@ object CompactScale {
     val ids = emb.select(min("vec_id"), max("vec_id")).head()
     val (lo, hi) = (ids.getLong(0), ids.getLong(1))
     val mid = lo + (hi - lo) / 2
-    val dir = java.nio.file.Files.createTempDirectory("compactscale").toString
+    val dir = Harness.scratchDir("compactscale")
     val t0 = System.nanoTime()
     graft.operators.Ann.buildIvfIndex(emb.where(col("vec_id") <= mid),
       "vec_id", "embedding", dir, nCentroids = nCents, seed = 42L,
@@ -60,8 +60,7 @@ object CompactScale {
     println(f"COMPACT compact ${(System.nanoTime() - tc) / 1e9}%.1f s ($rows rows)")
     println(s"COMPACT files_after ${files()}")
     probe("compacted")
-    val rebuildDir =
-      java.nio.file.Files.createTempDirectory("compactscale-rebuild").toString
+    val rebuildDir = Harness.scratchDir("compactscale-rebuild")
     val tr = System.nanoTime()
     graft.operators.Ann.buildIvfIndex(emb, "vec_id", "embedding", rebuildDir,
       nCentroids = nCents, seed = 42L, distributedFit = true)

@@ -29,7 +29,7 @@ object DedupIngestScale {
     val ids = docs.select(min("doc_id"), max("doc_id")).head()
     val (lo, hi) = (ids.getLong(0), ids.getLong(1))
     val mid = lo + (hi - lo) / 2
-    val dir = java.nio.file.Files.createTempDirectory("dedupingest").toString
+    val dir = Harness.scratchDir("dedupingest")
     val seed = docs.where(col("doc_id") <= mid)
     val t0 = System.nanoTime()
     graft.jobs.DedupIngestJob.seed(seed, "doc_id", "text", dir)

@@ -57,7 +57,7 @@ object FoldEconScale {
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     mults.foreach { m =>
-      val dir = java.nio.file.Files.createTempDirectory(s"foldecon$m").toString
+      val dir = Harness.scratchDir(s"foldecon$m")
       val seed = docs.orderBy("doc_id").limit(m * batchN)
       graft.jobs.DedupIngestJob.seed(seed, "doc_id", "text", dir)
       val batchRows = docs.orderBy(org.apache.spark.sql.functions.desc("doc_id"))
@@ -117,7 +117,7 @@ object FoldEconScale {
     val emb = spark.read.parquet(s"$srcDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     mults.foreach { m =>
-      val dir = java.nio.file.Files.createTempDirectory(s"compecon$m").toString
+      val dir = Harness.scratchDir(s"compecon$m")
       val base = emb.orderBy("vec_id").limit(m * batchN)
       val nCents = math.max(4, math.sqrt((m * batchN).toDouble).toInt)
       graft.operators.Ann.buildIvfIndex(base, "vec_id", "embedding", dir,

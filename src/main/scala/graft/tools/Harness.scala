@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -10,10 +11,12 @@ import org.apache.spark.sql.SparkSession
 /** The one dev-tool harness: every main under `graft.tools` builds its
   * session with [[Harness.session]], resolves its command-line targets
   * through [[Harness.targets]], reads executor task counters through a
-  * [[Harness.Meter]], times cold-cache runs with [[Harness.runs]], runs
-  * its serve-under-load readers as [[Harness.Readers]] and measures index
-  * dirs with the disk meter below, so all tools run the same profile and
-  * count the same things the same way. */
+  * [[Harness.Meter]], times cold-cache runs with [[Harness.runs]] (which
+  * stamps each block of runs with its [[Harness.phaseStamp]]), runs its
+  * serve-under-load readers as [[Harness.Readers]], writes its indexes
+  * under a [[Harness.scratchDir]] and measures them with the disk meter
+  * below, so all tools run the same profile and count the same things
+  * the same way. */
 object Harness {
 
   /** The dev-tool session profile — `graft.Bench`'s conf set:
@@ -107,10 +110,14 @@ object Harness {
     * Each run is metered on its own and prints
     * `TIMING <label> run<i> <wall> s <note> [tasks …]`; `note` renders the
     * run's result after its wall is taken.
-    * Read the median of runs 2..n as the steady state. */
+    * Read the median of runs 2..n as the steady state. Runs 2..n are one
+    * family of identical work, so after the `TIMING` lines one
+    * `PHASE <label> clean|degraded task_inflation=<x>` line stamps the
+    * block with its [[phaseStamp]]: a degraded block's walls measure the
+    * box, not the code. */
   def runs[T](meter: Meter, label: String, n: Int)(body: => T)
-             (note: T => String): Seq[Metered[T]] =
-    (1 to n).map { i =>
+             (note: T => String): Seq[Metered[T]] = {
+    val all = (1 to n).map { i =>
       meter.spark.catalog.clearCache()
       System.gc()
       val run = meter.delta(body)
@@ -118,6 +125,45 @@ object Harness {
         s"${note(run.result)} ${run.tasks.columns}")
       run
     }
+    val stamp = phaseStamp(Seq(all.drop(1).map(_.tasks.runMs / 1e3)))
+    println(f"PHASE $label ${stamp.phase} " +
+      f"task_inflation=${stamp.taskInflation}%.2f")
+    all
+  }
+
+  /** Phase evidence for one block of measurements: the box's documented
+    * degraded phase shows summed TASK time inflating 10-30× on identical
+    * work with GC flat (r10/r11 NOTES) — so the self-qualifying signal is
+    * max/median task seconds across runs of identical work, maxed over
+    * the families measured. Clean blocks land well under
+    * [[PhaseThreshold]]; the degraded phase lands far above it. */
+  final case class PhaseStamp(phase: String, taskInflation: Double)
+
+  /** Max tolerated per-family max/median task-time ratio before a block
+    * is stamped degraded. Clean-phase identical runs vary by tens of
+    * percent; the degraded phase inflates 10-30× — the threshold sits an
+    * order of magnitude under the failure signature and well above
+    * honest jitter. */
+  val PhaseThreshold = 4.0
+
+  /** Stamp a block from its per-family per-run summed task seconds (a
+    * family = runs of identical work). Families with fewer than 2
+    * samples carry no ratio and are skipped. The median is the LOWER
+    * middle element (r12 ADVICE): with the upper middle, a 2-sample
+    * family's median IS its max, so max/median is structurally 1.0 and
+    * the family can never vote degraded even when one run inflated 30× —
+    * the lower middle keeps every admitted family able to detect
+    * inflation (for n=2 the ratio degrades to max/min, strictly more
+    * sensitive, never less). */
+  def phaseStamp(families: Seq[Seq[Double]]): PhaseStamp = {
+    val ratios = families.filter(_.size >= 2).map { f =>
+      val s = f.sorted
+      val med = s((s.size - 1) / 2)
+      if (med > 0) s.last / med else 1.0
+    }
+    val worst = if (ratios.isEmpty) 1.0 else ratios.max
+    PhaseStamp(if (worst <= PhaseThreshold) "clean" else "degraded", worst)
+  }
 
   /** A command-line target: `name`, or `name=p1,p2,…` with parameters. */
   final case class Target(name: String, params: Seq[String])
@@ -263,10 +309,21 @@ object Harness {
     after.collect { case (n, b) if !before.contains(n) => b }.sum
 
   /** Number of `.parquet` files under `dir` — the listing cost every
-    * query or probe over that dir pays. */
+    * query or probe over that dir pays. Directories are not counted,
+    * `dir` itself included (a postings root is named `postings.parquet`). */
   def parquetFiles(dir: Path): Long = {
     val walk = Files.walk(dir)
-    try walk.filter(_.toString.endsWith(".parquet")).count()
+    try walk.filter(p => Files.isRegularFile(p) &&
+      p.toString.endsWith(".parquet")).count()
     finally walk.close()
+  }
+
+  /** A fresh temp dir under `java.io.tmpdir`, deleted when the JVM exits —
+    * the one place a tool makes one, so no run leaves its indexes on
+    * disk. A tool that builds one per run may delete it sooner. */
+  def scratchDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    sys.addShutdownHook(FileUtils.deleteQuietly(dir))
+    dir.toString
   }
 }

@@ -44,7 +44,7 @@ object LexIngestScale {
     val streamedN = (batches.toLong * batchDocs).min(total - 1)
     val seedN = total - streamedN
     val seed = docs.orderBy("doc_id").limit(seedN.toInt)
-    val dir = java.nio.file.Files.createTempDirectory("lexscale").toString
+    val dir = Harness.scratchDir("lexscale")
 
     val t0 = System.nanoTime()
     graft.jobs.LexIngestJob.seed(seed, "doc_id", "toks", dir)

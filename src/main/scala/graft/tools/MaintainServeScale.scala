@@ -31,7 +31,7 @@ object MaintainServeScale {
     val queries = emb.select(col("vec_id"), col("embedding")).limit(32)
       .persist(); queries.count()
 
-    val dir = java.nio.file.Files.createTempDirectory("maintainserve").toString
+    val dir = Harness.scratchDir("maintainserve")
     val t0 = System.nanoTime()
     graft.operators.Ann.buildIvfIndex(emb.where(col("vec_id") <= mid),
       "vec_id", "embedding", dir, nCentroids = nCents, seed = 42L,

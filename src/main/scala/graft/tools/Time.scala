@@ -1,18 +1,20 @@
 package graft.tools
 
 import java.io.File
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Ann
+import graft.jobs.LexIngestJob
+import graft.operators.{Ann, TfIdf}
 
 /** Dev tool: cold-cache, warm-JVM timing of named targets. Every run goes
   * through [[Harness.runs]], so each prints one
   * `TIMING <target> run<i> <wall> s <note> [tasks …]` line with the triage
-  * columns: same bytes with a swinging task time means the box; changed
-  * bytes mean the plan.
+  * columns (same bytes with a swinging task time means the box; changed
+  * bytes mean the plan), and each block of runs ends on one
+  * `PHASE <target> clean|degraded task_inflation=<x>` line.
   *
   * Usage: Time <dir> [runs=N] <target>... — N runs per target (default 3;
   * read the median of runs 2..N). A target is a SparkEntry query name
@@ -41,10 +43,20 @@ import graft.operators.Ann
   *    spill disk at 100×), `ann_index` (the build-once `buildIvfIndex`,
   *    then the per-batch `queryIvfIndex` probe of 100 queries, timed
   *    apart) and `ann_brute` (`bruteForceTopK` of 20 queries, the
-  *    linear-in-n baseline). */
+  *    linear-in-n baseline).
+  *  - `lex_index` (dir = corpus dir): the lexical index's reason to
+  *    exist. `LexIngestJob.seed` of the tokenized corpus into a fresh
+  *    dir per run (`lex_index_build`, noting the index `bytes=`), then 10
+  *    rotating 3-term queries from the corpus frequency head, each ranked
+  *    to its top 10: served off the index (`lex_index_probe10`, pruned
+  *    postings + stats sidecar) and recomputed from the documents by
+  *    `TfIdf.bm25` (`lex_index_raw10`, the recompute-per-query shape).
+  *    The two lanes must return the same top-10 ids per query; the last
+  *    line is `LEX_INDEX speedup_vs_raw=<x>` from the medians of runs
+  *    2..N. */
 object Time {
   private val own = Seq("suffix_full", "prep_full", "ivf_build", "ann_lsh",
-    "ann_ivf_sqrt", "ann_ivf_linear", "ann_index", "ann_brute")
+    "ann_ivf_sqrt", "ann_ivf_linear", "ann_index", "ann_brute", "lex_index")
 
   def main(args: Array[String]): Unit = {
     val dir = args.head
@@ -89,10 +101,10 @@ object Time {
             sys.props.getOrElse("graft.tuning.targetPartitionBytes",
               "default(64MB)") + " ==")
           Harness.runs(meter, t.name, n) {
-            val idx = Files.createTempDirectory("ivfbuild")
-            Ann.buildIvfIndex(emb, "vec_id", "embedding", idx.toString,
+            val idx = Harness.scratchDir("ivfbuild")
+            Ann.buildIvfIndex(emb, "vec_id", "embedding", idx,
               nCentroids = cells, seed = 42L, distributedFit = true)
-            idx.toString
+            idx
           } { idx =>
             // an A/B must compare identical indexes, not just walls; the
             // file count is the write cost (a dynamic-partition write
@@ -116,7 +128,7 @@ object Time {
             nCentroids = math.max(16, (nVec / 64L).toInt), nProbe = 4,
             distributedFit = true)))
         case "ann_index" =>
-          val idx = Files.createTempDirectory("annindex").toString
+          val idx = Harness.scratchDir("annindex")
           Harness.runs(meter, "ann_index_build", n) {
             Ann.buildIvfIndex(emb, "vec_id", "embedding", idx,
               nCentroids = Harness.sqrtCells(nVec))
@@ -131,12 +143,47 @@ object Time {
             Ann.bruteForceTopK(emb.where(col("vec_id") < 20), emb,
               "vec_id", "embedding", k = 5).count()
           }
+        case "lex_index" => lexIndex(meter, dir, n)
         case q =>
           val query = graft.SparkEntry.queries(q)
           rows(q)(query(spark, dir).count())
       }
     }
     spark.stop()
+  }
+
+  /** The `lex_index` target: the build lane keeps its last index for the
+    * two query lanes, which must agree on every query's top 10. */
+  private def lexIndex(meter: Harness.Meter, dir: String, n: Int): Unit = {
+    val spark = meter.spark
+    import spark.implicits._
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"),
+        graft.functions.TextFunctions.tokenize(col("text")).as("toks"))
+    val queries = docs.select(explode(col("toks")).as("term"))
+      .groupBy("term").count().orderBy(desc("count"), col("term"))
+      .limit(30).select("term").as[String].collect().toSeq.grouped(3).toSeq
+    val idx = Harness.runs(meter, "lex_index_build", n) {
+      val idx = Harness.scratchDir("lexindex")
+      LexIngestJob.seed(docs, "doc_id", "toks", idx)
+      idx
+    }(idx => s"bytes=${Harness.dirBytes(idx)}").last.result
+    def top10(scores: DataFrame): Seq[Long] =
+      scores.orderBy(desc("score"), col("id")).limit(10)
+        .select(col("id")).as[Long].collect().toSeq
+    def lane(label: String)(score: Seq[String] => DataFrame) =
+      Harness.runs(meter, label, n)(queries.map(t => top10(score(t))))(
+        r => s"queries=${r.size} ids=${r.map(_.size).sum}")
+    val probe = lane("lex_index_probe10")(LexIngestJob.query(spark, idx, _))
+    val raw = lane("lex_index_raw10")(TfIdf.bm25(docs, "doc_id", "toks", _))
+    def steady(rs: Seq[Harness.Metered[_]]): Double = {
+      val s = rs.drop(1).map(_.wallS).sorted
+      if (s.isEmpty) rs.head.wallS else s((s.size - 1) / 2)
+    }
+    println(f"LEX_INDEX queries=${queries.size} " +
+      f"speedup_vs_raw=${steady(raw) / steady(probe)}%.1fx")
+    require((probe ++ raw).map(_.result).distinct.size == 1,
+      "lex_index: the index probe and the recompute disagree on a top-10")
   }
 
   /** The `prep_full` target: the pipeline runs on every doc but each

@@ -67,7 +67,7 @@ object TriTenantScale {
     val ids = docs.select(min("doc_id"), max("doc_id")).head()
     val (lo, hi) = (ids.getLong(0), ids.getLong(1))
     val mid = lo + (hi - lo) / 2
-    val root = java.nio.file.Files.createTempDirectory("tritenant").toString
+    val root = Harness.scratchDir("tritenant")
     val dedupDir = s"$root/dedup"; val ivfDir = s"$root/ivf"
     val lexDir = s"$root/lex"
     // the engine's canonical whitespace tokenizer — the harness must

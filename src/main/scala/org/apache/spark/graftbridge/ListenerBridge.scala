@@ -12,7 +12,7 @@ import org.apache.spark.SparkContext
   * `processAllAvailable()` can attribute late-delivered task events to the
   * FOLLOWING batch — muddying exactly the outlier-batch diagnosis the
   * counters exist for. Draining the bus before the snapshot closes that
-  * window (r10 advice, BenchServe).
+  * window (r10 advice; `Harness.Meter` drains before every snapshot).
   */
 object ListenerBridge {
   /** Block until every queued listener event has been delivered, or

@@ -6,9 +6,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import graft.tools.Harness
 
 /** The dev-tool harness: the meter's counting and drain contract, the
-  * reader loop's per-phase report and error gate, and a guard that keeps
-  * session builders, task listeners and hand-rolled reader logs out of
-  * the individual tools. */
+  * timing loop and its phase stamp, the reader loop's per-phase report
+  * and error gate, the disk meter, and guards that keep session builders,
+  * task listeners, hand-rolled reader logs and temp dirs out of the
+  * individual tools. */
 class HarnessSpec extends SparkSuite {
 
   test("Meter.delta counts one task per partition, and an empty delta reads zero") {
@@ -62,6 +63,86 @@ class HarnessSpec extends SparkSuite {
       spark.catalog.clearCache()
       spark.sparkContext.removeSparkListener(meter)
     }
+  }
+
+  test("Harness.runs stamps runs 2..n with one PHASE line after the TIMING lines") {
+    val meter = new Harness.Meter(spark)
+    try {
+      val out = new java.io.ByteArrayOutputStream
+      Console.withOut(out) {
+        // identical work: four tasks of a fixed sleep each
+        Harness.runs(meter, "spec_phase", 3) {
+          spark.sparkContext.parallelize(1 to 4, 4)
+            .map { x => Thread.sleep(50); x }.count()
+        }(n => s"rows=$n")
+      }
+      val lines = out.toString.linesIterator.toSeq
+      assert(lines.count(_.startsWith("TIMING spec_phase run")) == 3,
+        lines.mkString("\n"))
+      val phase = lines.filter(_.startsWith("PHASE "))
+      assert(phase.size == 1, lines.mkString("\n"))
+      assert(phase.head.startsWith("PHASE spec_phase clean task_inflation="),
+        phase.head)
+      assert(lines.last == phase.head, lines.mkString("\n"))
+    } finally spark.sparkContext.removeSparkListener(meter)
+  }
+
+  // the phase stamp's contract: every committed timing carries its own
+  // phase evidence (per-family task-time inflation across identical
+  // work, the documented signature of the box's degraded phase: task
+  // 10-30× with GC flat)
+
+  test("uniform task times across identical batches stamp clean") {
+    val s = Harness.phaseStamp(Seq(
+      Seq(10.0, 11.2, 10.5, 9.8, 10.9, 11.0, 10.1, 10.4, 10.2, 10.7,
+        10.3, 10.6),
+      Seq(101.0, 98.0, 104.0, 99.5),
+      Seq(1.1, 0.9, 1.0, 1.05, 0.95, 1.0, 1.02, 0.98)))
+    assert(s.phase == "clean", s.toString)
+    assert(s.taskInflation < 1.5, s.toString)
+  }
+
+  test("one batch in the documented 10-30x inflation signature stamps degraded") {
+    val s = Harness.phaseStamp(Seq(
+      Seq(10.0, 10.5, 10.2, 9.8, 10.9, 143.0, 10.1, 10.4, 10.2, 10.7,
+        10.3, 10.6)))
+    assert(s.phase == "degraded", s.toString)
+    assert(s.taskInflation > 10.0, s.toString)
+  }
+
+  test("inflation is judged per identical-work family, not across families") {
+    // burst batches legitimately cost ~10x a steady batch — mixed into
+    // one population that would false-positive every run
+    val s = Harness.phaseStamp(Seq(
+      Seq(10.0, 10.5, 10.2, 10.4),
+      Seq(100.0, 105.0, 98.0, 102.0)))
+    assert(s.phase == "clean", s.toString)
+  }
+
+  test("a 2-sample family CAN vote degraded (lower-middle median, r12 advice)") {
+    // with the upper-middle median a 2-sample family's median IS its max,
+    // so max/median was structurally 1.0 — a 30x-inflated batch hid
+    assert(Harness.phaseStamp(Seq(Seq(10.0, 300.0))).phase == "degraded")
+    // honest 2-sample jitter still stamps clean (ratio = max/min there)
+    assert(Harness.phaseStamp(Seq(Seq(10.0, 12.5))).phase == "clean")
+  }
+
+  test("degenerate families (singleton, empty, zero-median) do not crash or false-positive") {
+    assert(Harness.phaseStamp(Seq(Seq(5.0), Seq.empty)).phase == "clean")
+    assert(Harness.phaseStamp(Seq(Seq(0.0, 0.0, 0.0))).phase == "clean")
+    assert(Harness.phaseStamp(Seq.empty).phase == "clean")
+  }
+
+  test("parquetFiles counts part files, not a dir named *.parquet") {
+    val root = Files.createTempDirectory("harness-pq")
+    try {
+      val p = Files.createDirectory(root.resolve("p.parquet"))
+      Files.write(p.resolve("part-0.parquet"), Array[Byte](1))
+      Files.write(p.resolve("part-1.parquet"), Array[Byte](1))
+      Files.write(p.resolve("_SUCCESS"), Array.emptyByteArray)
+      assert(Harness.parquetFiles(p) == 2)
+      assert(Harness.parquetFiles(root) == 2)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 
   test("Explain and Time reject an unknown target before any Spark job, listing the valid ones") {
@@ -181,5 +262,15 @@ class HarnessSpec extends SparkSuite {
       switches.exists(src.contains)
     }
     assert(hits.isEmpty, hits.mkString(", "))
+  }
+
+  test("the retired serve-bench switches stay out of the sources, and only Harness makes a temp dir in the tools") {
+    val switch = "SPARK_GRAFT_" + "SERVE_"
+    val hits = sources("src").filter(p => Files.readString(p).contains(switch))
+    assert(hits.isEmpty, hits.mkString(", "))
+    val offenders = sources("src/main/scala/graft/tools")
+      .filterNot(_.getFileName.toString == "Harness.scala")
+      .filter(p => Files.readString(p).contains("createTempDirectory"))
+    assert(offenders.isEmpty, offenders.mkString(", "))
   }
 }
