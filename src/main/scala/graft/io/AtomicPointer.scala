@@ -52,7 +52,7 @@ object AtomicPointer {
     * copy a crashed fallback flip may have left, then the primary again,
     * retrying through the exists/open race of a concurrent non-atomic
     * flip. None only when no probe finds a pointer (callers treat that as
-    * "no pointer layout here" — e.g. fall back to a legacy layout). */
+    * "nothing committed here yet"). */
   def read(fs: FileSystem, dir: String, name: String): Option[String] = {
     val pfs = pointerIoFs(fs)
     val primary = new Path(s"$dir/$name")
@@ -108,12 +108,6 @@ object AtomicPointer {
   private def flipFrom(fs: FileSystem, pfs: FileSystem, conf: Configuration,
                        dir: String, name: String, tmp: Path,
                        primary: Path): Unit = {
-    if (pfs ne fs) {
-      // migration from a checksummed-written pointer: a stale sidecar
-      // would fail every checksummed read of the raw-renamed content
-      val crc = new Path(s"$dir/.$name.crc")
-      if (pfs.exists(crc)) pfs.delete(crc, false)
-    }
     def atomicReplace(): Boolean =
       if (pfs ne fs) pfs.rename(tmp, primary) // rename(2): atomic on POSIX
       else try {

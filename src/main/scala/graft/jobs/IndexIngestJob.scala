@@ -9,7 +9,7 @@ import graft.operators.Ann
   * micro-batch of (id, vector) rows lands as ONE marker-committed IVF
   * shard, and any concurrent [[graft.operators.Ann.queryIvfIndex]] —
   * same process or another — observes each new generation atomically the
-  * moment its `_SHARD_COMMIT_` marker exists. A 100 TB corpus growing
+  * moment its shard commit marker exists. A 100 TB corpus growing
   * ~0.1%/day runs exactly this shape: the day's vectors stream in,
   * index maintenance stays O(delta) (SCALING.md: 7× cheaper than a warm
   * rebuild at the 100× fixture), and serving never stops or reloads.
@@ -92,9 +92,7 @@ object IndexIngestJob {
         onCompact(batchId)
       },
       sweep = spark => {
-        // only a POINTER-layout index has anything to sweep: a legacy
-        // in-place index migrates on its first in-loop compact, and an
-        // index that has not been built yet must idle harmlessly (a
+        // an index that has not been built yet must idle harmlessly (a
         // resolve here would throw and kill the stream on its very
         // first — possibly empty — trigger)
         if (Ann.ivfPointerExists(spark, dir)) {

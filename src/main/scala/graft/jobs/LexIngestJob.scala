@@ -137,6 +137,7 @@ object LexIngestJob {
     * (`batch=-1`), the [[DedupIngestJob.seed]] analogue. */
   def seed(corpus: DataFrame, idCol: String, tokensCol: String,
            dir: String): Unit = {
+    requireStatsLayout(corpus.sparkSession, dir)
     val (postings, lens) = componentsOf(corpus, idCol, tokensCol)
     // the seed is the LARGEST shard of the index's life and serves
     // until the first fold — it gets the full term layout up front
@@ -181,6 +182,7 @@ object LexIngestJob {
             foldBaseRatio: Double = 0.3,
             maxLiveGens: Int = 8,
             sweepMinAgeMs: Long = 10000L): StreamingQuery = {
+    requireStatsLayout(docs.sparkSession, dir)
     val base = docs.writeStream.outputMode("append")
     checkpointLocation.foreach(base.option("checkpointLocation", _))
     val log = genLog(dir)
@@ -243,6 +245,25 @@ object LexIngestJob {
       .start()
   }
 
+  /** Refuses to write into a pre-stats index (`postings` batch dirs, no
+    * `stats` component): the served view drops every batch without all
+    * three components, so appending there would silently hide the old
+    * batches. Run once per writer, before it writes anything. */
+  private def requireStatsLayout(spark: SparkSession, dir: String): Unit = {
+    val postings = new org.apache.hadoop.fs.Path(s"$dir/index/postings")
+    val hfs = postings.getFileSystem(spark.sessionState.newHadoopConf())
+    val hasBatches =
+      try hfs.listStatus(postings).exists(st =>
+        st.isDirectory && st.getPath.getName.startsWith("batch="))
+      catch { case _: java.io.FileNotFoundException => false }
+    if (hasBatches &&
+        !hfs.exists(new org.apache.hadoop.fs.Path(s"$dir/index/stats")))
+      throw new IllegalStateException(
+        s"pre-stats lexical index at $dir (postings batches present, " +
+          "stats/ sidecar absent): appending would leave every old batch " +
+          "out of the served view. Delete the index and re-ingest the " +
+          "corpus (the ingest loop writes the 3-component layout).")
+  }
 
   /** BM25 scores of every matching document for `terms` over the
     * effective index (live generations + unfolded shards): columns
@@ -263,32 +284,6 @@ object LexIngestJob {
   def query(spark: SparkSession, dir: String, terms: Seq[String],
             k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "lexical query needs at least one term")
-    // Legacy-layout guard (r14 ADVICE): a pre-r14 2-component index
-    // (postings/docs, no stats sidecar) would not fail here — its
-    // committed batches lack a stats/_SUCCESS, so completeBatches would
-    // silently DROP every old unfolded batch from the served view
-    // (silent partial data loss on read). Detect the legacy shape —
-    // postings batch dirs present, stats component absent — and refuse
-    // loudly instead. (Legacy FOLDED generations already fail loudly on
-    // the missing stats path.)
-    locally {
-      val idx = new org.apache.hadoop.fs.Path(s"$dir/index")
-      val hfs = idx.getFileSystem(spark.sessionState.newHadoopConf())
-      val postingsHasBatches =
-        try hfs.exists(new org.apache.hadoop.fs.Path(s"$dir/index/postings")) &&
-          hfs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/index/postings"))
-            .exists(st => st.isDirectory &&
-              st.getPath.getName.startsWith("batch="))
-        catch { case _: java.io.FileNotFoundException => false }
-      if (postingsHasBatches &&
-          !hfs.exists(new org.apache.hadoop.fs.Path(s"$dir/index/stats")))
-        throw new IllegalStateException(
-          s"legacy 2-component lexical index at $dir (postings batches " +
-            "present, stats/ sidecar absent — pre-stats layout): serving " +
-            "it would silently drop every unfolded batch from the view. " +
-            "Rebuild the index by re-ingesting the corpus (the ingest " +
-            "loop writes the 3-component layout).")
-    }
     val view = genLog(dir).effective(spark).getOrElse(
       throw new IllegalStateException(
         s"no lexical index at $dir — nothing has been ingested"))

@@ -542,9 +542,7 @@ object Ann {
     * `_BUILD_ID` marker file INSIDE each component directory (Spark
     * ignores underscore-prefixed files on read), so [[queryIvfIndex]] can
     * verify all three agree without running a count job — a tampered or
-    * hand-mixed generation fails loudly. Pre-pointer indexes (components
-    * at the root, no CURRENT) are still resolved ([[resolveIvfDir]]) and
-    * migrate to the pointer layout on their next rebuild/compact. */
+    * hand-mixed generation fails loudly. */
   def buildIvfIndex(data: DataFrame, idCol: String, vecCol: String,
                     dir: String, nCentroids: Int = 16,
                     seed: Long = 42L, distributedFit: Boolean = false,
@@ -571,7 +569,7 @@ object Ann {
           nCells = 1, statsMult = nCentsInt)
         .where(col("rn") === 1))
     }
-    // superseded generation / legacy components / stale scratch deleted
+    // superseded generation / stale scratch deleted
     // AFTER the flip — entirely off the reader-visible path. With
     // retainSuperseded the old generation stays for in-flight readers;
     // [[sweepIvfIndex]] finishes the cycle once they drain.
@@ -676,11 +674,9 @@ object Ann {
   }
 
   /** Resolve an index ROOT to its live generation directory: the one
-    * named by `dir/CURRENT` (pointer layout), or the root itself when a
-    * pre-pointer index keeps its `manifest.json` in place (legacy
-    * layout — still readable; its next rebuild/compact migrates it).
-    * A non-atomic flip racing the read is absorbed by the pointer read
-    * itself; a dir with neither layout fails loudly, and fast.
+    * named by `dir/CURRENT`. A non-atomic flip racing the read is absorbed
+    * by the pointer read itself; a dir without a pointer fails loudly, and
+    * fast.
     *
     * TIERED indexes (r12 verdict 1) carry a comma-separated generation
     * LIST in CURRENT — base first, append-target TAIL last. This
@@ -697,8 +693,7 @@ object Ann {
     resolveIvfGens(new Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
 
-  /** Whether `dir` has a CURRENT pointer — false before the first build
-    * and on a legacy in-place index. */
+  /** Whether `dir` has a CURRENT pointer — false before the first build. */
   private[graft] def ivfPointerExists(spark: SparkSession,
                                       dir: String): Boolean =
     Current.read(new Path(dir)
@@ -708,8 +703,6 @@ object Ann {
     Current.read(fs, dir) match {
       case Some(content) =>
         Current.decode(dir, content)._2.map(g => s"$dir/$g")
-      case None if fs.exists(new Path(s"$dir/manifest.json")) =>
-        Seq(dir) // legacy in-place layout
       case None =>
         // an unbuilt or mistyped path (r11 advice: fail now, never spin)
         // — told apart from a dir that holds index artifacts but no
@@ -723,8 +716,8 @@ object Ann {
               else "contains no index artifacts"} — unbuilt or mistyped " +
               "path; run buildIvfIndex first")
         throw new IllegalStateException(
-          s"IVF index at $dir has neither a CURRENT pointer nor a legacy " +
-            "manifest.json — torn, empty, or pre-manifest; rerun buildIvfIndex")
+          s"IVF index at $dir has generation artifacts but no readable " +
+            "CURRENT pointer — torn or hand-edited; rerun buildIvfIndex")
     }
 
   /** The live buildId(s), after the same manifest + marker consistency
@@ -785,10 +778,9 @@ object Ann {
 
   /** Post-flip cleanup, OFF the commit path: the generation sweep
     * ([[GenerationPointer.sweep]]: superseded `gen-*` dirs, stale flip
-    * tmps, the stale aside pointer) plus the legacy in-place components
-    * the pointer now shadows. Deleting a 100 TB postings tree here blocks
-    * nothing — new resolutions already land on `keepGens`. Run
-    * maintenance single-writer (the [[appendIvfShard]] rule): a
+    * tmps, the stale aside pointer). Deleting a 100 TB postings tree
+    * here blocks nothing — new resolutions already land on `keepGens`.
+    * Run maintenance single-writer (the [[appendIvfShard]] rule): a
     * concurrent build's in-flight generation dir would be deleted as an
     * orphan by the winner's cleanup. Returns the deleted names. */
   private def cleanupAfterFlip(fs: FileSystem, dir: String,
@@ -796,15 +788,15 @@ object Ann {
     // the live generations' fold provenance (compacted generations only):
     // deleting the fold's SOURCE is fenced against appends that committed
     // into it after the fold snapshot (r11 advice — those rows are in no
-    // live generation; see IvfManifest.provenance)
-    val provs: Seq[(String, Set[Int])] = keepGens.toSeq.flatMap { kg =>
-      try readIvfManifest(fs, s"$dir/$kg").provenance
+    // live generation; see IvfManifest)
+    val srcs = keepGens.toSeq.flatMap { kg =>
+      try readIvfManifest(fs, s"$dir/$kg").srcs
       catch { case scala.util.control.NonFatal(_) => Seq.empty }
     }
-    def fenceLostAppends(postings: String): Unit = provs.foreach {
-      case (srcBuildId, srcShards) =>
+    def fenceLostAppends(postings: String): Unit = srcs.foreach {
+      case (src, snapshot) =>
         val lost =
-          commitMarkerIds(fs, postings, srcBuildId).filterNot(srcShards)
+          commitMarkerIds(fs, postings, src).filterNot(snapshot.contains)
         if (lost.nonEmpty) throw new IllegalStateException(
           s"cleanupAfterFlip: shard(s) ${lost.sorted.mkString(",")} were " +
             s"committed into the superseded generation at $postings AFTER " +
@@ -814,14 +806,7 @@ object Ann {
             "evidence. Re-append those rows from source (or rebuild), " +
             "then sweep.")
     }
-    val legacy = ("manifest.json" +: IvfComponents).filter { n =>
-      val p = new Path(s"$dir/$n")
-      fs.exists(p) && {
-        if (n == "postings.parquet") fenceLostAppends(p.toString)
-        fs.delete(p, true)
-      }
-    }
-    legacy ++ Current.sweep(fs, dir, keepGens, { g =>
+    Current.sweep(fs, dir, keepGens, { g =>
       fenceLostAppends(s"$dir/$g/postings.parquet"); true })
   }
 
@@ -832,17 +817,13 @@ object Ann {
     * generation on disk, so queries PLANNED against it before the flip
     * finish their scans instead of dying on vanished files; once in-flight
     * readers drain (a serving loop's batch boundary bounds this), sweep.
-    * Refuses a legacy in-place index (nothing there is superseded — the
-    * live components ARE the root). Returns the deleted top-level names. */
+    * Every live manifest is read and checked first, so an index this code
+    * cannot read fails the sweep before anything is deleted. Returns the
+    * deleted top-level names. */
   def sweepIvfIndex(spark: SparkSession, dir: String): Seq[String] = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = resolveIvfGens(fs, dir)
-    require(gens != Seq(dir),
-      s"sweepIvfIndex: $dir is a legacy in-place index — nothing is " +
-        "superseded; its next rebuild/compact migrates it to the pointer " +
-        "layout")
-    cleanupAfterFlip(fs, dir,
-      gens.map(g => new Path(g).getName).toSet)
+    cleanupAfterFlip(fs, dir, resolveAndReadManifests(fs, dir)
+      .map(gm => new Path(gm._1).getName).toSet)
   }
 
   /** Compact an incrementally-grown IVF index IN PLACE: fold every
@@ -866,17 +847,16 @@ object Ann {
     * the old generation complete until the instant they see the new one.
     * Old-generation claim/commit markers vanish with the superseded
     * generation dir — the next append claims shard 1 of the NEW buildId.
-    * A legacy in-place index is migrated to the pointer layout by its
-    * first compact. Run single-writer like appends: an append racing a
-    * compaction could commit a shard into the generation the flip is
-    * about to supersede (same rule the doc on [[appendIvfShard]] already
-    * imposes for object stores; serial maintenance satisfies it).
+    * Run single-writer like appends: an append racing a compaction could
+    * commit a shard into the generation the flip is about to supersede
+    * (same rule the doc on [[appendIvfShard]] already imposes for object
+    * stores; serial maintenance satisfies it).
     * Returns the number of rows compacted. */
   def compactIvfIndex(spark: SparkSession, dir: String,
                       retainSuperseded: Boolean = false): Long = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // every live generation folds in — on a TIERED index the legacy
-    // entry point is simply a full (major) collapse to one generation
+    // every live generation folds in — on a TIERED index this is a full
+    // (major) collapse to one generation
     compactGensInto(spark, fs, dir, resolveAndReadManifests(fs, dir),
       keepPrefix = Seq.empty, freshTail = false,
       retainSuperseded = retainSuperseded)
@@ -1230,9 +1210,7 @@ object Ann {
 
   /** `srcs` (compacted generations only): the FOLD PROVENANCE — which
     * source generations and exactly which of their committed shards this
-    * generation was folded from. Generations compacted by earlier code
-    * carry a single source as `srcBuildId`/`srcShards` instead (still
-    * read, so their fence holds). Post-flip cleanup fences on
+    * generation was folded from. Post-flip cleanup fences on
     * it: a shard committed into the source generation AFTER the fold's
     * snapshot (an append racing the compact, a single-writer breach) has
     * rows in NO live generation, and deleting the superseded dir would
@@ -1243,18 +1221,7 @@ object Ann {
   private case class IvfManifest(seed: Long, nCentroids: Long,
                                  requested: Long, buildId: String,
                                  shards: Seq[Int],
-                                 srcBuildId: Option[String] = None,
-                                 srcShards: Seq[Int] = Nil,
-                                 srcs: Seq[(String, Seq[Int])] = Nil) {
-    /** Every source generation this one was folded from, as
-      * buildId -> snapshot shard set — the lost-append fence's input.
-      * Unifies the legacy single-source fields with the tiered
-      * multi-source `srcs` list. */
-    def provenance: Seq[(String, Set[Int])] =
-      (srcBuildId.map(b => (b, srcShards.toSet)).toSeq ++
-        srcs.map { case (b, sh) => (b, sh.toSet) })
-        .groupBy(_._1).view.mapValues(_.flatMap(_._2).toSet).toSeq
-  }
+                                 srcs: Seq[(String, Seq[Int])])
 
   private def readIvfManifest(fs: FileSystem,
                               dir: String): IvfManifest = {
@@ -1277,12 +1244,13 @@ object Ann {
       .getOrElse(throw new IllegalStateException(
         s"IVF manifest in $dir has no shards list — rebuild: $mtext"))
     require(shards.nonEmpty, s"IVF manifest in $dir commits zero shards")
-    val srcBuildId = """"srcBuildId":"([^"]+)"""".r.findFirstMatchIn(mtext)
-      .map(_.group(1))
-    val srcShards = """"srcShards":\[([0-9, ]*)\]""".r.findFirstMatchIn(mtext)
-      .map(_.group(1).split(",").map(_.trim).filter(_.nonEmpty)
-        .map(_.toInt).toSeq).getOrElse(Seq.empty)
-    // tiered multi-source provenance: "srcs":"buildA:0|1,buildB:0"
+    // refused, not ignored: ignoring it would drop the lost-append fence
+    if (mtext.contains("\"srcBuildId\""))
+      throw new IllegalStateException(
+        s"IVF manifest in $dir records single-source srcBuildId fold " +
+          "provenance from an older layout — delete the index and rerun " +
+          s"buildIvfIndex: $mtext")
+    // fold provenance: "srcs":"buildA:0|1,buildB:0"
     val srcs = """"srcs":"([^"]*)"""".r.findFirstMatchIn(mtext)
       .map(_.group(1).split(",").toSeq.filter(_.nonEmpty).map { tok =>
         val i = tok.indexOf(':')
@@ -1291,7 +1259,7 @@ object Ann {
           .filter(_.nonEmpty).map(_.toInt))
       }).getOrElse(Seq.empty)
     IvfManifest(num("seed"), num("nCentroids"), num("requested"),
-      buildId, shards, srcBuildId, srcShards, srcs)
+      buildId, shards, srcs)
   }
 
   private def requireMarkersMatch(fs: FileSystem,

@@ -40,13 +40,11 @@ object AppendServeScale {
     println(f"TIMING build_base ${(System.nanoTime() - t0) / 1e9}%.1f s " +
       s"(rows=$nBase cells=$nCentroids)")
 
-    // generation observed = committed shard count at plan time (the
-    // marker files — inside postings.parquet/ — are the commit
-    // protocol's unit of visibility)
-    def committedShards(): Long =
-      Option(new java.io.File(s"${graft.operators.Ann.resolveIvfDir(
-          spark, dir)}/postings.parquet").list()).map(
-        _.count(_.startsWith("_SHARD_COMMIT_")).toLong).getOrElse(0L)
+    // generation observed = committed shard count at plan time, base
+    // shard included (the commit markers are the protocol's unit of
+    // visibility)
+    def committedShards(): Int =
+      graft.operators.Ann.committedIvfShardCount(spark, dir)
     def query(): Unit = graft.operators.Ann.queryIvfIndex(
       queries, "vec_id", "embedding", dir, k = 10, nProbe = 4).count()
     def timedQuery(): Double = {

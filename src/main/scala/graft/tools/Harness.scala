@@ -5,7 +5,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** The one dev-tool harness: every main under `graft.tools` builds its
@@ -38,20 +39,26 @@ object Harness {
     spark
   }
 
-  /** Summed executor task metrics. Spill is memory + disk bytes spilled,
-    * the convention the SCALING.md/NOTES.md triage columns use. */
+  /** Summed executor task metrics, plus the jobs started and the stages
+    * completed (skipped stages never run, so they are not counted). Spill
+    * is memory + disk bytes spilled, the convention the SCALING.md/NOTES.md
+    * triage columns use. */
   final case class Tasks(tasks: Long, runMs: Long, cpuMs: Long, gcMs: Long,
                          spillBytes: Long, shuffleReadBytes: Long,
-                         shuffleWriteBytes: Long) {
+                         shuffleWriteBytes: Long, jobs: Long = 0,
+                         stages: Long = 0) {
     def -(o: Tasks): Tasks = Tasks(tasks - o.tasks, runMs - o.runMs,
       cpuMs - o.cpuMs, gcMs - o.gcMs, spillBytes - o.spillBytes,
       shuffleReadBytes - o.shuffleReadBytes,
-      shuffleWriteBytes - o.shuffleWriteBytes)
+      shuffleWriteBytes - o.shuffleWriteBytes, jobs - o.jobs,
+      stages - o.stages)
 
     /** The triage columns: same bytes with a swinging task time means the
-      * box; changed bytes mean the plan. */
+      * box; changed bytes mean the plan; jobs and stages price the fixed
+      * per-job cost a wall pays outside its tasks. */
     def columns: String =
-      f"[tasks $tasks task ${runMs / 1e3}%.1f s cpu ${cpuMs / 1e3}%.1f s " +
+      f"[jobs $jobs stages $stages " +
+        f"tasks $tasks task ${runMs / 1e3}%.1f s cpu ${cpuMs / 1e3}%.1f s " +
         f"gc ${gcMs / 1e3}%.1f s spill ${spillBytes / 1e6}%.1f MB " +
         f"shufRead ${shuffleReadBytes / 1e6}%.1f MB " +
         f"shufWrite ${shuffleWriteBytes / 1e6}%.1f MB]"
@@ -62,13 +69,20 @@ object Harness {
   final case class Metered[T](result: T, wallS: Double, tasks: Tasks)
 
   /** Sums the task metrics of every task that ends in the session's
-    * process. Task-end events reach listeners asynchronously, so every
-    * read drains the listener bus first; without that, events that arrive
-    * late would be counted in the next measurement's columns. */
+    * process, and counts its job starts and stage completions. Listener
+    * events arrive asynchronously, so every read drains the listener bus
+    * first; without that, events that arrive late would be counted in the
+    * next measurement's columns. */
   final class Meter(val spark: SparkSession) extends SparkListener {
-    private val tasks, runMs, cpuNs, gcMs, spill, shufRead, shufWrite =
-      new AtomicLong
+    private val tasks, runMs, cpuNs, gcMs, spill, shufRead, shufWrite, jobs,
+      stages = new AtomicLong
     spark.sparkContext.addSparkListener(this)
+
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      stages.incrementAndGet()
 
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
       val m = t.taskMetrics
@@ -91,7 +105,7 @@ object Harness {
         println("HARNESS_WARN listener bus drain timed out — task " +
           "columns may lag one measurement")
       Tasks(tasks.get, runMs.get, cpuNs.get / 1000000L, gcMs.get,
-        spill.get, shufRead.get, shufWrite.get)
+        spill.get, shufRead.get, shufWrite.get, jobs.get, stages.get)
     }
 
     def delta[T](body: => T): Metered[T] = {

@@ -7,9 +7,10 @@ import graft.io.{AtomicPointer, GenerationPointer}
 /** Pins for the generation-pointer protocol the IVF index and the
   * generation-log families share: the pointer read under a racing
   * non-atomic flip, the codec, the tier rule each family folds by, the
-  * superseded-generation sweep (with IVF's lost-append fence over
-  * manifests written by earlier code), and the rule that only `io/`
-  * touches the pointer primitive. */
+  * superseded-generation sweep (and IVF's refusal of a manifest in the
+  * older single-source provenance form), and the rules that only `io/`
+  * touches the pointer primitive and only Ann names the IVF pointer and
+  * shard markers. */
 class GenerationPointerSpec extends SparkSuite {
 
   private val Folded = GenerationPointer("FOLDED", "base-", watermarked = true)
@@ -152,7 +153,7 @@ class GenerationPointerSpec extends SparkSuite {
     assert(e.getMessage == "base-live incomplete")
   }
 
-  test("an IVF generation whose manifest carries single-source srcBuildId/srcShards provenance keeps its lost-append fence") {
+  test("an IVF manifest carrying single-source srcBuildId/srcShards provenance is refused by query and sweep, and nothing is deleted") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val rnd = new scala.util.Random(7)
@@ -169,8 +170,7 @@ class GenerationPointerSpec extends SparkSuite {
     val oldBuildId = oldGen.getFileName.toString.stripPrefix("gen-")
     assert(graft.operators.Ann.compactIvfIndex(
       spark, dir, retainSuperseded = true) == 220L)
-    // rewrite the live manifest's provenance the way earlier code wrote a
-    // single-source fold
+    // rewrite the live manifest's provenance in the single-source form
     val manifest =
       Paths.get(graft.operators.Ann.resolveIvfDir(spark, dir), "manifest.json")
     val text = Files.readString(manifest)
@@ -179,17 +179,16 @@ class GenerationPointerSpec extends SparkSuite {
     Files.writeString(manifest, text.replace(srcs,
       s""","srcBuildId":"$oldBuildId","srcShards":[0,1]"""))
     Files.deleteIfExists(manifest.resolveSibling(".manifest.json.crc"))
-    // a shard committed into the superseded generation after the fold
-    val marker = oldGen.resolve(s"postings.parquet/_SHARD_COMMIT_${oldBuildId}_2")
-    Files.createFile(marker)
-    val e = intercept[IllegalStateException] {
-      graft.operators.Ann.sweepIvfIndex(spark, dir)
+    def refused(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains("srcBuildId") &&
+        e.getMessage.contains("buildIvfIndex"), e.getMessage)
     }
-    assert(e.getMessage.contains("raced the maintenance flip"), e.getMessage)
-    assert(Files.isDirectory(oldGen))
-    Files.delete(marker)
-    assert(graft.operators.Ann.sweepIvfIndex(spark, dir)
-      .contains(oldGen.getFileName.toString))
+    refused(graft.operators.Ann.queryIvfIndex(emb.where(col("vec_id") < 5),
+      "vec_id", "embedding", dir, k = 3))
+    refused(graft.operators.Ann.sweepIvfIndex(spark, dir))
+    assert(Files.isDirectory(oldGen),
+      "a refused sweep must leave the superseded generation on disk")
   }
 
   private def sources(dir: String): Seq[Path] = {
@@ -211,5 +210,11 @@ class GenerationPointerSpec extends SparkSuite {
       Files.readString(p).contains("\"" + "CURRENT" + "\""))
       .map(_.getFileName.toString)
     assert(current == Seq("Ann.scala"), current.mkString(", "))
+    val markers = main.filter { p =>
+      val text = Files.readString(p)
+      text.contains("_SHARD_" + "COMMIT_") ||
+        text.contains("_SHARD_" + "CLAIM_")
+    }.map(_.getFileName.toString)
+    assert(markers == Seq("Ann.scala"), markers.mkString(", "))
   }
 }

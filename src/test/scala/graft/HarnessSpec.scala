@@ -40,6 +40,23 @@ class HarnessSpec extends SparkSuite {
     }
   }
 
+  test("Meter.delta counts the jobs and stages of one action of known shape") {
+    val meter = new Harness.Meter(spark)
+    try {
+      // one RDD action over one shuffle: one job of two stages, five map
+      // tasks and two reduce tasks
+      val run = meter.delta {
+        spark.sparkContext.parallelize(1 to 10, 5).map(x => (x % 3, x))
+          .reduceByKey(_ + _, 2).collect().length
+      }
+      assert(run.result == 3)
+      assert(run.tasks.jobs == 1 && run.tasks.stages == 2 &&
+        run.tasks.tasks == 7, run.tasks.toString)
+      assert(run.tasks.columns.startsWith("[jobs 1 stages 2 tasks 7 "),
+        run.tasks.columns)
+    } finally spark.sparkContext.removeSparkListener(meter)
+  }
+
   test("Harness.runs recomputes what an earlier run persisted and meters each run alone") {
     val meter = new Harness.Meter(spark)
     try {

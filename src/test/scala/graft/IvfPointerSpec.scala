@@ -1,14 +1,16 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 /** r11 zero-blip maintenance pins: the persisted IVF index commits
   * rebuilds/compactions by atomically repointing `dir/CURRENT` at a fresh
   * generation directory, so there is NO reader-visible window — the
   * pre-r11 in-place swap exposed a no-manifest gap of a few metadata ops
-  * that a continuously-resolving reader WILL hit. Also pins the legacy
-  * (pre-pointer, components-at-root) read path and its migration, and
-  * orphan-generation cleanup after a crashed build. */
+  * that a continuously-resolving reader WILL hit. Also pins that every
+  * reader and writer refuses the root layout (components and manifest at
+  * the root, no CURRENT) without touching it, and orphan-generation
+  * cleanup after a crashed build. */
 class IvfPointerSpec extends SparkSuite {
 
   private def emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
@@ -72,14 +74,12 @@ class IvfPointerSpec extends SparkSuite {
         emb.where(col("vec_id") < 5), emb, "vec_id", "embedding", k = 3)))
   }
 
-  test("legacy in-place layout resolves for reads and appends; compact migrates it to the pointer layout") {
-    val dir = java.nio.file.Files.createTempDirectory("ivflegacy").toString
+  test("a root-layout index (components at the root, no CURRENT) is refused by query, append, compact and sweep, and left as it was") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfroot").toString
     graft.operators.Ann.buildIvfIndex(emb.where(col("vec_id") < 400),
       "vec_id", "embedding", dir, nCentroids = 8, seed = 42L)
-    val expect = served(dir)
-    // demote to the pre-r11 layout: move the generation's contents to the
-    // root and drop the pointer — exactly what an index built by the old
-    // code looks like on disk
+    // demote to the root layout: move the generation's contents to the
+    // root and drop the pointer
     val gdir = new java.io.File(
       graft.operators.Ann.resolveIvfDir(spark, dir))
     gdir.listFiles().foreach { f =>
@@ -88,28 +88,28 @@ class IvfPointerSpec extends SparkSuite {
     assert(gdir.delete())
     new java.io.File(dir, "CURRENT").delete()
     new java.io.File(dir, ".CURRENT.crc").delete()
-    // reads resolve to the root
-    assert(graft.operators.Ann.resolveIvfDir(spark, dir) == dir)
-    assert(served(dir) == expect, "legacy layout must serve identically")
-    // appends land in the legacy root, same results contract
-    assert(graft.operators.Ann.appendIvfShard(
-      emb.where(col("vec_id") >= 400 && col("vec_id") < 450),
-      "vec_id", "embedding", dir) == 1)
-    val grown = served(dir)
-    // first compact migrates: CURRENT appears, legacy components vanish,
-    // results bit-identical (compaction is a relayout)
-    assert(graft.operators.Ann.compactIvfIndex(spark, dir) == 450L)
-    assert(new java.io.File(dir, "CURRENT").isFile,
-      "compact must migrate a legacy index to the pointer layout")
-    Seq("manifest.json", "centroids.parquet", "postings.parquet").foreach {
-      n => assert(!new java.io.File(dir, n).exists(),
-        s"legacy component $n must be cleaned after migration")
+    def listing(): Seq[(String, Long)] = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.map(p =>
+          (root.relativize(p).toString, p.toFile.length())).toList.sorted
+      finally walk.close()
     }
-    assert(served(dir) == grown, "migration changed query results")
-    // the append loop restarts on the new generation
-    assert(graft.operators.Ann.appendIvfShard(
-      emb.where(col("vec_id") >= 450 && col("vec_id") < 460),
-      "vec_id", "embedding", dir) == 1)
+    val before = listing()
+    val calls = Seq[(String, () => Any)](
+      "queryIvfIndex" -> (() => served(dir)),
+      "appendIvfShard" -> (() => graft.operators.Ann.appendIvfShard(
+        emb.where(col("vec_id") >= 400 && col("vec_id") < 450),
+        "vec_id", "embedding", dir)),
+      "compactIvfIndex" ->
+        (() => graft.operators.Ann.compactIvfIndex(spark, dir)),
+      "sweepIvfIndex" -> (() => graft.operators.Ann.sweepIvfIndex(spark, dir)))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("buildIvfIndex"), s"$name: ${e.getMessage}")
+    }
+    assert(listing() == before,
+      "a refused index must be neither written nor deleted")
   }
 
   test("retainSuperseded + sweep: queries planned before the flip finish on the old generation") {

@@ -70,6 +70,26 @@ class LexStreamSpec extends SparkSuite {
     new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/index/FOLDED")), "UTF-8").trim
 
+  test("seed and start refuse a pre-stats index (postings + docs batches, no stats) before writing anything") {
+    val dir = java.nio.file.Files.createTempDirectory("lexprestats").toString
+    val (postings, lens) =
+      LexIngestJob.componentsOf(tokenized(corpusA), "doc_id", "toks")
+    postings.write.parquet(s"$dir/index/postings/batch=0")
+    lens.write.parquet(s"$dir/index/docs/batch=0")
+    def refused(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains("pre-stats"), e.getMessage)
+    }
+    refused(LexIngestJob.seed(tokenized(corpusB), "doc_id", "toks", dir))
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val stream = MemoryStream[(Long, String)]
+    refused(LexIngestJob.start(
+      tokCols(stream.toDF().toDF("doc_id", "text")), "doc_id", "toks", dir,
+      checkpointLocation = Some(s"$dir/ckpt")))
+    assert(!new java.io.File(s"$dir/index/stats").exists(),
+      "a refused writer must not write the stats component")
+  }
+
   test("streamed appends serve exact BM25 after every batch; seed included") {
     val dir = java.nio.file.Files.createTempDirectory("lexstream").toString
     LexIngestJob.seed(tokenized(corpusA), "doc_id", "toks", dir)
